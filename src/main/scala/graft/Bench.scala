@@ -9,31 +9,17 @@ import org.apache.spark.sql.SparkSession
   * MEDIAN of `SPARK_GRAFT_SWEEPS` (default 3) full sweeps — one load
   * burst can no longer set the round's number, while a real regression
   * (slow in 2 of 3 sweeps) stays visible. All raw sweeps ship in
-  * bench_full.json; `sweep_totals` carries their totals inline. Set
-  * SPARK_GRAFT_SWEEPS=1 for quick local profiling (that mode keeps the
-  * old bounded expensive-tail retry with per-query MIN).
+  * bench_full.json; `sweep_totals` carries their totals inline. When
+  * only one sweep runs (SPARK_GRAFT_SWEEPS=1, or a wall-clock budget
+  * that fits one sweep) Bench keeps the old bounded expensive-tail
+  * retry with per-query MIN.
   *
-  * Session tuning mirrors what a cluster deployment would set per-job:
-  * shuffle partitions ≈ cores (not 200), AQE on (runtime coalescing +
-  * skew-join), small maxPartitionBytes so a handful of small parquet
-  * files still fan out across all local cores (at real scale the
-  * default 128m is correct — this knob compensates for sf-scale files).
+  * The session is [[LocalSession]]'s.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start()
 
     // Warmup: pay one-time costs (Hadoop FS init, codegen compiler,
     // parquet footer reads) outside the per-query timings.
@@ -87,20 +73,6 @@ object Bench {
     // driver passes none and gets the full sweep
     val only = args.toSet
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    def cleanup(): Unit = {
-      // operators may persist intermediate sketch tables; drop them so one
-      // query's cache doesn't tax the next query's memory. clearCache only
-      // covers the SQL cache — iterative operators (PageRank, components,
-      // BPE fit) also leave localCheckpoint RDD blocks behind, which
-      // accumulated over a 198-query sweep into enough block-manager /
-      // memory pressure to slow the checkpoint-heavy queries 2-3×
-      // (reproduced: graph_ppr 3.5 s standalone vs 12 s late in the
-      // sweep). Drop those too: per-query isolation means no query reads
-      // a predecessor's checkpoint.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     // mid-sweep load probes: the r7 artifact carried clean pre/post
     // controls yet 7 queries were 4-8× their quiet-host times — a load
     // burst BETWEEN the two windows is invisible to bracketing controls.
@@ -116,7 +88,7 @@ object Bench {
       try { fn(spark, sfDir).count() }
       catch { case _: Throwable => ok = false; failed += name }
       val dt = (System.nanoTime() - t0) / 1e9
-      cleanup()
+      LocalSession.isolate(spark)
       (name, dt, ok)
     }
     val queriesToRun = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -191,9 +163,10 @@ object Bench {
         n -> (if (ts.nonEmpty) ts((ts.length - 1) / 2) else t1)
       }
     } else {
-      // single-sweep mode (local profiling): the pre-r13 targeted noise
-      // retry — re-run the expensive tail once, keep the per-query MIN.
-      // Bounded: only queries over 2.5 s, at most 12 of them.
+      // single-sweep mode (local profiling, or a budget that fits one
+      // sweep): the pre-r13 targeted noise retry — re-run the expensive
+      // tail once, keep the per-query MIN. Bounded: only queries over
+      // 2.5 s, at most 12 of them.
       val retryNames = firstPass.filter(_._2 > 2.5).sortBy(-_._2).take(12)
         .filterNot { case (n, _, _) => failed.contains(n) }
         .map(_._1).toSet
@@ -222,14 +195,6 @@ object Bench {
     val sweepTotals = allSweeps.map(_.map(_._2).sum).toSeq
 
     val controlPost = controlSec()
-    // SPARK_GRAFT_SETTLED_POST_SEC=N (r16 what's-wrong #3 probe): wait N
-    // seconds after the immediate post-control and measure a SECOND one.
-    // If post > pre on a quiet host but the settled control returns to
-    // the pre level, the residual was query-side cleanup I/O (shuffle
-    // file deletion, ContextCleaner) landing inside the control window —
-    // a protocol artifact, not host load.
-    val controlPostSettled = sys.env.get("SPARK_GRAFT_SETTLED_POST_SEC")
-      .map { s => Thread.sleep(s.toLong * 1000L); controlSec() }
     // quiet-host envelope for this scan at sf0.1 on local[32] is ~0.1-0.3s
     // (measured); 1.0s = >3× sustained inflation. Any window tripping
     // marks the run — load at the start AND the end taints everything
@@ -258,9 +223,7 @@ object Bench {
       .map { case (n, t1) => "\"" + n + "\":" + fmt(t1) }
       .mkString("{", ",", "}")
     val sweepTotalsJson = sweepTotals.map(fmt).mkString("[", ",", "]")
-    val settledJson = controlPostSettled
-      .map(c => s""""control_post_settled_sec":${fmt(c)},""").getOrElse("")
-    val controlJson = s""""control_pre_sec":${fmt(controlPre)},"control_post_sec":${fmt(controlPost)},$settledJson"control_mid_sec":$midJson,"retried_firstpass":$retryJson,"sweeps":$nSweeps,"sweep_totals":$sweepTotalsJson,"load_suspect":$loadSuspect"""
+    val controlJson = s""""control_pre_sec":${fmt(controlPre)},"control_post_sec":${fmt(controlPost)},"control_mid_sec":$midJson,"retried_firstpass":$retryJson,"sweeps":$nSweeps,"sweep_totals":$sweepTotalsJson,"load_suspect":$loadSuspect"""
     val fullJson = {
       val qs = results.map(entry).mkString("{", ",", "}")
       // every raw sweep ships alongside the median record — the

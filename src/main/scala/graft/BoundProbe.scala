@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main for the Jaccard candidate layer's measured gates:
@@ -9,20 +8,12 @@ import org.apache.spark.sql.functions._
   * chose (band-only / prefix / LSH degrade), the measured candidate
   * bound that drove it, and per-stage wall times — the numbers the
   * scale artifacts cite. Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.BoundProbe <sfDir>"
+  *   sbt "runMain graft.BoundProbe <sfDir>"
   */
 object BoundProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start()
     def sk(d: org.apache.spark.sql.DataFrame) = d.select(col("doc_id").as("id"),
         col("n_chars").cast("long").as("len"),
         graft.ops.Dedup.hashedShingles(col("text"), 3).as("hs"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Vectors}
@@ -26,30 +26,9 @@ import graft.ops.{Dedup, Vectors}
   */
 object LshSkewProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (planMode, dirs) = args.partition(_ == "--plan")
-    dirs.foreach(d => if (planMode.nonEmpty) plan(spark, d) else probe(spark, d))
+    val spark = LocalSession.start()
+    args.foreach(probe(spark, _))
     spark.stop()
-  }
-
-  /** `--plan`: print the static physical plan + the optimizer size
-    * estimates feeding ScaleHints.maybeBroadcast for the actual
-    * dedup_embedding_lsh query — no join execution. */
-  def plan(spark: SparkSession, sfDir: String): Unit = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val q = Dedup.embeddingNearDups(emb, "vec_id", "embedding",
-      threshold = 0.4)
-    println(s"=== $sfDir static plan ===")
-    println(q.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
   }
 
   def probe(spark: SparkSession, sfDir: String): Unit = {

@@ -1,37 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: `runMain graft.PlanCheck <sfDir> <query...>`
   * prints the formatted physical plan and the timed row count for each
   * named query — the .explain feedback loop the builder prompt mandates. */
 object PlanCheck {
+
+  /** The plan text with its JVM-global counters renumbered in order of
+    * first appearance — expression ids (`#123`), exchange `plan_id`s and
+    * RDD ids — and the line numbers dropped from RDD call sites, so the
+    * same plan writes the same snapshot whatever the JVM built before it
+    * and however the calling source file is laid out. */
+  def snapshotText(plan: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, String]
+    val renumbered = """(#|plan_id=|RDD\[)\d+""".r.replaceAllIn(plan, m =>
+      ids.getOrElseUpdate(m.matched, m.group(1) + (ids.size + 1)))
+    """(\.scala):\d+""".r.replaceAllIn(renumbered, "$1")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start()
+    // SPARK_GRAFT_PLAN_DIR: also write each query's formatted plan to
+    // <dir>/<name>.txt — before/after plan snapshots that diff cleanly
+    // across commits ([[snapshotText]]). SPARK_GRAFT_PLAN_ONLY=1
+    // skips execution (static plans for all 223 queries in one JVM);
+    // note a handful of operators (checkpointed loops) materialize
+    // during PLANNING, so even plan-only mode runs those jobs.
+    val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
+    val planOnly = sys.env.get("SPARK_GRAFT_PLAN_ONLY").contains("1")
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         println(s"\n========== $name ==========")
-        // SPARK_GRAFT_PLAN_DIR: also write each query's formatted plan to
-        // <dir>/<name>.txt — the before/after plan snapshots the
-        // optimization-round deliverable requires. SPARK_GRAFT_PLAN_ONLY=1
-        // skips execution (static plans for all 223 queries in one JVM);
-        // note a handful of operators (checkpointed loops) materialize
-        // during PLANNING, so even plan-only mode runs those jobs.
-        val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-        val planOnly = sys.env.get("SPARK_GRAFT_PLAN_ONLY").contains("1")
         try {
           val df = fn(spark, sfDir)
           val plan = df.queryExecution.explainString(
@@ -41,7 +41,7 @@ object PlanCheck {
               java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
               java.nio.file.Files.write(
                 java.nio.file.Paths.get(d, s"$name.txt"),
-                plan.getBytes("UTF-8"))
+                snapshotText(plan).getBytes("UTF-8"))
             case None => println(plan)
           }
           if (!planOnly) {
@@ -53,11 +53,9 @@ object PlanCheck {
           case e: Throwable =>
             println(s"FAILED: " + e.toString.take(500))
         }
-        // per-query isolation, same as Bench: cached sketch tables and
-        // loop checkpoints must not leak between plan snapshots
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // cached sketch tables and loop checkpoints must not leak
+        // between plan snapshots
+        LocalSession.isolate(spark)
       }
     }
     spark.stop()

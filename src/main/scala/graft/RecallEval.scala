@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off measurement main for the scale artifacts: recall of the
   * occupancy-gated hyperplane-LSH near-dup path vs the exhaustive
   * cosine baseline on a given embeddings table — the number the sf10
   * spot artifact reports next to `dedup_embedding_lsh`'s step (the
   * plane/table scaling holds recall ANALYTICALLY at the anchor cosine;
   * this measures it on the actual corpus). Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.RecallEval <sfDir> [threshold]"
+  *   sbt "runMain graft.RecallEval <sfDir> [threshold]"
   * Optional third arg scaleTables=true|false|both — `both` evaluates
   * the recall-holding table growth AND the fixed-table (linear-work)
   * alternative against ONE shared exhaustive baseline (the O(n²) legs
@@ -35,15 +33,7 @@ object RecallEval {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val threshold = if (args.length > 1) args(1).toDouble else 0.4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start()
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = e.count()
     // the exhaustive legs are the expensive part (O(n²) — ~2×10¹⁰ dot

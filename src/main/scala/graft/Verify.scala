@@ -27,13 +27,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally {
-        // SQL cache AND leftover localCheckpoint RDD blocks (iterative
-        // operators) — same per-query isolation as Bench.cleanup
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      finally LocalSession.isolate(spark)
     }
     // oracle aux artifacts (IVF centroids/assignment, PQ codebook) for
     // the ann_* index-replay oracles — written after the dump so the

@@ -110,6 +110,51 @@ object PageRank {
       scale: Long = 1000000L,
       broadcastMaxNodes: Long = 10000000L): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
+    val g = degreeEdges(edges, srcCol, dstCol, broadcastMaxNodes)
+    val base = scale - scale * dampNum / dampDen // (1−d)·scale, exact
+    val ranks0 = g.deg.select(col("src").as("node"), lit(scale).as("rank"))
+    iterate(g, ranks0, lit(base), iters, dampNum, dampDen)
+  }
+
+  /** Personalized PageRank (Jeh & Widom 2003 / Haveliwala 2002):
+    * teleport mass lands ONLY on the `seeds` node set, so rank measures
+    * proximity to the seeds — the corpus-expansion signal ("documents
+    * close to my trusted set" in the link/similarity graph) rather than
+    * global authority. Same quantized arithmetic and iteration shape as
+    * [[pageRank]]; the seed flag is a nodes-sized broadcast join applied
+    * to each iteration's aggregate output (already keyed on node). Seeds
+    * start at `scale`, everything else at 0. */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+      seedCol: String, srcCol: String = "src", dstCol: String = "dst",
+      iters: Int = 5, dampNum: Long = 85L, dampDen: Long = 100L,
+      scale: Long = 1000000L,
+      broadcastMaxNodes: Long = 10000000L): DataFrame = {
+    require(iters >= 1, "iters must be >= 1")
+    val g = degreeEdges(edges, srcCol, dstCol, broadcastMaxNodes)
+    val seedSet = seeds.select(col(seedCol).cast("long").as("node"))
+      .distinct().withColumn("__seed", lit(1))
+    val base = scale - scale * dampNum / dampDen
+    val ranks0 = g.deg.select(col("src").as("node"))
+      .join(g.hint(seedSet), Seq("node"), "left")
+      .select(col("node"),
+        when(col("__seed").isNotNull, lit(scale)).otherwise(lit(0L)).as("rank"))
+    val withSeedBase = (ranks: DataFrame) => ranks
+      .join(g.hint(seedSet), Seq("node"), "left")
+      .select(col("node"),
+        (col("rank") + when(col("__seed").isNotNull, lit(base))
+          .otherwise(lit(0L))).as("rank"))
+    iterate(g, ranks0, lit(0L), iters, dampNum, dampDen,
+      postStep = withSeedBase)
+  }
+
+  /** The loop inputs both PageRank variants build from an edge list:
+    * `deg` (src, __deg), the degree-annotated loop table `edgesDeg`,
+    * the join hint the node count selects, and the big-graph gates. */
+  private case class DegreeEdges(deg: DataFrame, edgesDeg: DataFrame,
+      hint: DataFrame => DataFrame, big: Boolean, reliable: Boolean)
+
+  private def degreeEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      broadcastMaxNodes: Long): DegreeEdges = {
     // materialize the (possibly expensive) upstream edge derivation ONCE:
     // deg, the degree join, and the node count all read this checkpoint
     // instead of re-running the caller's joins/distinct three times.
@@ -165,72 +210,12 @@ object PageRank {
     // blocks for real (Dataset.unpersist is a no-op on a localCheckpoint)
     if (big) ScaleHints.releaseCheckpoint(e)
 
-    val base = scale - scale * dampNum / dampDen // (1−d)·scale, exact
-    val ranks0 = deg.select(col("src").as("node"), lit(scale).as("rank"))
-    iterate(edgesDeg, ranks0, lit(base), hint, iters, dampNum, dampDen,
-      reliable = reliable, cutEvery = if (big) 3 else 2)
+    DegreeEdges(deg, edgesDeg, hint, big, reliable)
   }
 
-  /** Personalized PageRank (Jeh & Widom 2003 / Haveliwala 2002):
-    * teleport mass lands ONLY on the `seeds` node set, so rank measures
-    * proximity to the seeds — the corpus-expansion signal ("documents
-    * close to my trusted set" in the link/similarity graph) rather than
-    * global authority. Same quantized arithmetic and iteration shape as
-    * [[pageRank]]; the seed flag is a nodes-sized broadcast join applied
-    * to each iteration's aggregate output (already keyed on node). Seeds
-    * start at `scale`, everything else at 0. */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      seedCol: String, srcCol: String = "src", dstCol: String = "dst",
-      iters: Int = 5, dampNum: Long = 85L, dampDen: Long = 100L,
-      scale: Long = 1000000L,
-      broadcastMaxNodes: Long = 10000000L): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    // same size-gated storage discipline as [[pageRank]], incl. the
-    // serialized transient-edge rule
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    val deg0 = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-    val nNodes = deg0.count()
-    val bcast = nNodes <= broadcastMaxNodes
-    val hint: DataFrame => DataFrame =
-      if (bcast) broadcast else (df => df.hint("shuffle_hash"))
-    val big = nNodes > bigGraphNodes(e.sparkSession)
-    val reliable = big && ScaleHints.reliableConfigured(e)
-    val deg = if (big) ScaleHints.cut(deg0, reliable) else deg0
-    // same gated partition-once discipline as [[pageRank]]
-    val edgesDeg = if (big) {
-      val eSrc = if (reliable) ScaleHints.cut(e, reliable = true) else e
-      val ed = eSrc.join(hint(deg), Seq("src"))
-        .repartition(col(if (bcast) "dst" else "src"))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      ed.count()
-      ed
-    } else e.join(hint(deg), Seq("src"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-    if (big) ScaleHints.releaseCheckpoint(e)
-    val seedSet = seeds.select(col(seedCol).cast("long").as("node"))
-      .distinct().withColumn("__seed", lit(1))
-    val base = scale - scale * dampNum / dampDen
-    val ranks0 = deg.select(col("src").as("node"))
-      .join(hint(seedSet), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed").isNotNull, lit(scale)).otherwise(lit(0L)).as("rank"))
-    val withSeedBase = (ranks: DataFrame) => ranks
-      .join(hint(seedSet), Seq("node"), "left")
-      .select(col("node"),
-        (col("rank") + when(col("__seed").isNotNull, lit(base))
-          .otherwise(lit(0L))).as("rank"))
-    iterate(edgesDeg, ranks0, lit(0L), hint, iters, dampNum, dampDen,
-      postStep = withSeedBase, reliable = reliable,
-      cutEvery = if (big) 3 else 2)
-  }
-
-  private def iterate(edgesDeg: DataFrame, ranks0: DataFrame,
-      baseCol: org.apache.spark.sql.Column, hint: DataFrame => DataFrame,
-      iters: Int, dampNum: Long, dampDen: Long,
-      postStep: DataFrame => DataFrame = identity,
-      reliable: Boolean = false, cutEvery: Int = 2): DataFrame = {
+  private def iterate(g: DegreeEdges, ranks0: DataFrame,
+      baseCol: org.apache.spark.sql.Column, iters: Int, dampNum: Long,
+      dampDen: Long, postStep: DataFrame => DataFrame = identity): DataFrame = {
     // lineage is cut every `cutEvery`-th round, not every round: each
     // eager cut is a full job (schedule + materialize + store), and a
     // 2–3-round plan is still constant-size — this divides the job
@@ -239,16 +224,17 @@ object PageRank {
     // hygiene). Big graphs stretch to every 3rd round (the cut jobs
     // are a larger share of a big loop's wall-clock); reliable mode
     // makes each cut a checkpoint-FS write ([[ScaleHints.cut]]).
-    var ranks = ScaleHints.cut(ranks0, reliable)
+    val cutEvery = if (g.big) 3 else 2
+    var ranks = ScaleHints.cut(ranks0, g.reliable)
     for (it <- 1 to iters) {
-      val contribs = edgesDeg
-        .join(hint(ranks.withColumnRenamed("node", "src")), Seq("src"))
+      val contribs = g.edgesDeg
+        .join(g.hint(ranks.withColumnRenamed("node", "src")), Seq("src"))
         .select(col("dst"), expr("rank div __deg").as("__c"))
       ranks = postStep(contribs.groupBy(col("dst").as("node"))
           .agg((baseCol + expr(s"(sum(__c) * ${dampNum}L) div ${dampDen}L"))
             .as("rank")))
       if (it % cutEvery == 0 && it < iters)
-        ranks = ScaleHints.cut(ranks, reliable)
+        ranks = ScaleHints.cut(ranks, g.reliable)
     }
     ranks
   }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,14 +48,32 @@ object JsonlPublish {
     * JSON schema — `Title` vs `title` would collide in one case-
     * insensitive union scan) and unioned AFTER normalization, mirroring
     * the reference's per-directory processing loop
-    * (combine_json_to_jsonl.py:327-359). */
+    * (combine_json_to_jsonl.py:327-359). A directory with no JSON file
+    * is skipped (a quiet day's listing); with none left, the sink gets an
+    * empty JSONL set and the stats are empty. */
   def run(spark: SparkSession, inputDirs: Seq[String], outPath: String,
       runDate: String): DataFrame = {
-    val records = inputDirs
+    val records = inputDirs.filter(holdsJson(spark, _))
       .map(d => toRagRecords(Sources.jsonDirRecursive(spark, d), runDate))
-      .reduce(_ unionByName _)
+      .reduceOption(_ unionByName _)
+      .getOrElse(toRagRecords(spark.emptyDataFrame
+        .withColumn("src_file", lit(null).cast("string")), runDate))
     Sinks.writeJsonl(records, outPath)
     records.groupBy(col("source"))
       .agg(count(lit(1)).as("n_objects"))
+  }
+
+  /** Whether `dir` holds a non-empty `*.json` file at any depth — without
+    * one the JSON scan cannot infer a schema. A file listing, no read. */
+  private def holdsJson(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listFiles(p, true)
+    var found = false
+    while (!found && files.hasNext) {
+      val f = files.next()
+      found = f.getLen > 0 && f.getPath.getName.endsWith(".json")
+    }
+    found
   }
 }

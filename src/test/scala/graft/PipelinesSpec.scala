@@ -105,6 +105,32 @@ class PipelinesSpec extends AnyFunSuite {
     assert(fda.getAs[String]("date") == "2024-01-01")
   }
 
+  test("JSONL publish on a quiet day: JSON-less or no input dirs publish " +
+      "an empty set") {
+    def publish(dirs: Seq[String]): (Map[String, Long], Seq[String]) = {
+      val out = tmp() + "/out"
+      val stats = JsonlPublish.run(spark, dirs, out, runDate = "2026-01-01")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val lines = new java.io.File(out).listFiles()
+        .filter(_.getName.endsWith(".json")).toSeq
+        .flatMap(f => Files.readAllLines(f.toPath).toArray.map(_.toString))
+      (stats, lines)
+    }
+    val in = tmp()
+    new java.io.File(s"$in/empty/sub").mkdirs()
+    Files.writeString(java.nio.file.Path.of(s"$in/empty/sub/notes.txt"), "x")
+    new java.io.File(s"$in/full").mkdirs()
+    Files.writeString(java.nio.file.Path.of(s"$in/full/a.json"),
+      """{"content":"body","title":"T","url":"https://x/1"}""")
+
+    assert(publish(Seq(s"$in/empty")) == (Map.empty, Seq.empty))
+    assert(publish(Seq.empty) == (Map.empty, Seq.empty))
+    // an empty directory beside a full one drops out; the full one publishes
+    val (stats, lines) = publish(Seq(s"$in/empty", s"$in/full"))
+    assert(stats == Map("full" -> 1L))
+    assert(lines.size == 1 && lines.head.contains("\"content\":\"body\""))
+  }
+
   test("quarantine split routes rows to ok/failed sinks") {
     val df = Seq((1, true), (2, false), (3, true)).toDF("id", "ok")
     val base = tmp()

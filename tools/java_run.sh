@@ -9,7 +9,11 @@
 # classpath = compiled classes + /opt/spark/jars (which ships
 # scala-library). Run `sbt compile` first; this script never compiles.
 #
-# Usage: SPARK_GRAFT_SF_DIR=... tools/java_run.sh graft.Bench [args...]
+# Usage: SPARK_GRAFT_SF_DIR=... tools/java_run.sh graft.Bench [query...]
+#        tools/java_run.sh graft.PlanCheck <sfDir> [query...]
+#        tools/java_run.sh graft.{Verify,BoundProbe,LshSkewProbe,RecallEval} <sfDir> ...
+# Bench, PlanCheck and the probes run local[N], N = SPARK_GRAFT_CPUS, else
+# every core (graft.LocalSession).
 set -e
 [ $# -ge 1 ] || { echo "usage: java_run.sh <main> [args...]" >&2; exit 2; }
 REPO="$(cd "$(dirname "$0")/.." && pwd)"

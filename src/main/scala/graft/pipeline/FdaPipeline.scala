@@ -13,22 +13,46 @@ import graft.expr.{functions => gf}
   *   master union update (U1)
   *
   * The reference runs this eagerly over pandas + Excel
-  * (fda_rag_extraction/scripts/fda_watcher.py:357-588); here each stage is
-  * a `DataFrame => DataFrame` and Catalyst fuses them: the anti-join sits
-  * BEFORE the expensive clean (the reference's hand-rolled pushdown,
-  * fda_watcher.py:399-400 vs :446-502, preserved structurally), the master
-  * is broadcast when small, and everything downstream of the join is one
-  * codegen'd stage.
+  * (fda_rag_extraction/scripts/fda_watcher.py:357-588) and cleans only
+  * the delta (:399-400 vs :446-502); `Result.delta` keeps `clean_corpus`
+  * above the anti-join. In a lazy plan Catalyst pushes the views' corpus
+  * gate below it onto the raw scan, so a caller reading more than one
+  * view derives them from a cut of `delta` (`res.copy(delta = cut)`), as
+  * [[graft.streaming.ScheduledIngest]] does: the cut is the barrier.
   */
 object FdaPipeline {
 
-  /** Output of one ingest run. `quarantined` carries the NEW (delta)
-    * records that failed the corpus gate — the manual-review split (S10,
-    * fda_watcher.py:224-227's too-short extraction): they are withheld
-    * from master, so a later run re-evaluates them if the source page
-    * improves; a human (or a better extractor) works the quarantine. */
-  case class Result(published: DataFrame, updatedMaster: DataFrame,
-      quarantined: DataFrame)
+  /** One ingest run: `delta` is the fresh records absent from `master`,
+    * fingerprinted (`rag_id`) and cleaned (`corpus`); the outputs are
+    * views over it. `quarantined` holds the delta records that fail the
+    * corpus gate — the manual-review split (S10, fda_watcher.py:224-227's
+    * too-short extraction): withheld from master, so a later run
+    * re-evaluates them if the source page improves. */
+  case class Result(delta: DataFrame, master: DataFrame, runDate: String,
+      source: String) {
+    // coalesce: a NULL corpus (null text in the landing record) must fail
+    // the gate INTO quarantine — bare `!(length(null) > 50)` is NULL and
+    // would drop the row from both branches, leaving it invisible and
+    // re-processed forever
+    private def corpusOk = coalesce(length(col("corpus")) > 50, lit(false)) // fda_watcher.py:224-227
+
+    def quarantined: DataFrame = delta.filter(!corpusOk)
+
+    def published: DataFrame = delta.filter(corpusOk).select(
+      TextOps.defaultNonEmpty(col("corpus"),
+        TextOps.recordToJsonString(col("url"), col("title"), col("date"))).as("content"),
+      lit(source).as("source"),
+      col("url"),
+      TextOps.defaultNonEmpty(col("date"), lit(runDate)).as("date"),
+      lit("1.0").as("version"),
+      col("title"),
+      col("description"),
+      col("rag_id"))
+
+    def updatedMaster: DataFrame = Fingerprint.unionMasterUpdate(
+      delta.filter(corpusOk).select(master.columns.toIndexedSeq.map(col): _*),
+      master, "ingest_seq").drop("ingest_seq")
+  }
 
   /** @param fresh    scraped records: (url, title, description, date, text)
     * @param master   previous master table with a `rag_id` column
@@ -40,33 +64,8 @@ object FdaPipeline {
     val fingerprinted = fresh
       .withColumn("rag_id", Fingerprint.ragId(
         Fingerprint.idBase(col("url"), col("title"), col("date"))))
-
     val delta = Fingerprint.deltaAntiJoin(fingerprinted, master, "rag_id")
       .withColumn("corpus", gf.clean_corpus(col("text")))
-
-    // coalesce: a NULL corpus (null text in the landing record) must fail
-    // the gate INTO quarantine — bare `!(length(null) > 50)` is NULL and
-    // would drop the row from both branches, leaving it invisible and
-    // re-processed forever
-    val corpusOk = coalesce(length(col("corpus")) > 50, lit(false)) // fda_watcher.py:224-227
-    val cleaned = delta.filter(corpusOk)
-    val quarantined = delta.filter(!corpusOk)
-
-    val published = cleaned.select(
-      TextOps.defaultNonEmpty(col("corpus"),
-        TextOps.recordToJsonString(col("url"), col("title"), col("date"))).as("content"),
-      lit(source).as("source"),
-      col("url"),
-      TextOps.defaultNonEmpty(col("date"), lit(runDate)).as("date"),
-      lit("1.0").as("version"),
-      col("title"),
-      col("description"),
-      col("rag_id"))
-
-    val updatedMaster = Fingerprint.unionMasterUpdate(
-      cleaned.select(master.columns.toIndexedSeq.map(col): _*), master, "ingest_seq")
-      .drop("ingest_seq")
-
-    Result(published, updatedMaster, quarantined)
+    Result(delta, master, runDate, source)
   }
 }

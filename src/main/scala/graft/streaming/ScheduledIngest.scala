@@ -1,10 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.ops.ScaleHints
 import graft.pipeline.FdaPipeline
 
 /** The reference's daemon scheduler as a Structured Streaming driver
@@ -18,7 +20,8 @@ import graft.pipeline.FdaPipeline
   *
   * Per tick (foreachBatch):
   *  - the batch's records fingerprint + anti-join against the persisted
-  *    master, so re-scraped known records are no-ops (delta-only, T2)
+  *    master, so re-scraped known records are no-ops (delta-only, T2);
+  *    only the delta is cleaned, once, into the cut every output reads
   *  - publishable records land in `publishDir/batch=<id>` (JSONL, S9;
   *    per-batch overwrite, so a foreachBatch retry is idempotent)
   *  - gate-failing NEW records land in `quarantineDir/batch=<id>` — the
@@ -36,8 +39,7 @@ import graft.pipeline.FdaPipeline
   * any streaming sink commit; at 100 TB the master would be a bucketed
   * table ([[graft.sources.Sinks.writeBucketedMaster]]) and the swap a
   * metastore pointer flip, but the per-tick dataflow — batch-sized
-  * work, master read once, delta-only downstream — is already the
-  * cluster shape. */
+  * work, delta-only downstream — is already the cluster shape. */
 object ScheduledIngest {
 
   /** Scrape landing-file schema: one JSON record per scraped listing
@@ -64,59 +66,61 @@ object ScheduledIngest {
       nQuarantined: Long, nMaster: Long)
 
   private def fsFor(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
+  private def complete(fs: FileSystem, d: Path) = fs.exists(new Path(d, "_SUCCESS"))
+
+  /** `FileSystem.rename` returns false on failure: a failed `dir → .old`
+    * would let `.next → dir` nest `.next` inside the live master. */
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst failed")
+
+  /** Crash recovery for the two-rename swap: if the daemon died between
+    * "dir → .old" and ".next → dir", a COMPLETE copy exists next door —
+    * .next (the new state, fully written before any rename) wins over
+    * .old. Without this, the next tick would start from an empty master. */
+  private[graft] def recoverMaster(fs: FileSystem, dir: Path): Unit =
+    if (!complete(fs, dir)) {
+      if (complete(fs, dir.suffix(".next"))) rename(fs, dir.suffix(".next"), dir)
+      else if (complete(fs, dir.suffix(".old"))) rename(fs, dir.suffix(".old"), dir)
+    }
+
   private def loadMaster(spark: SparkSession, masterDir: String): DataFrame = {
     val (fs, p) = fsFor(spark, masterDir)
-    def complete(d: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-    // crash recovery for the two-rename swap: if the daemon died between
-    // "dir → .old" and ".next → dir", masterDir is missing but a COMPLETE
-    // copy exists next door — .next (the new state, fully written before
-    // any rename) wins over .old (the prior state). Without this, a
-    // crash in that window would silently restart from an empty master.
-    if (!complete(p)) {
-      val next = new org.apache.hadoop.fs.Path(s"$masterDir.next")
-      val old = new org.apache.hadoop.fs.Path(s"$masterDir.old")
-      if (complete(next)) fs.rename(next, p)
-      else if (complete(old)) fs.rename(old, p)
-    }
-    if (complete(p)) spark.read.parquet(masterDir)
+    recoverMaster(fs, p)
+    if (complete(fs, p)) spark.read.parquet(masterDir)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], masterSchema)
   }
 
   /** Replace the master atomically enough for a single-writer daemon:
-    * the new master materializes to a side directory FIRST (reading the
-    * old master is finished by then — the union update is materialized
-    * there), then swaps in via filesystem renames (Hadoop FileSystem
-    * API — local FS in tests, HDFS/object-store semantics on a
-    * cluster; on S3-like stores the production form is a metastore /
-    * table-format pointer flip, same dataflow). A crash between the
-    * renames leaves the side directory complete on disk; the next
-    * tick's load sees the old or the new master, never a half-written
-    * one. */
+    * the union update (which reads the old master) is written in full to
+    * `.next` first, then renamed in ([[swapDirs]]). A crash between the
+    * renames leaves `.next` complete, so the next load sees the old or
+    * the new master, never a half-written one. On S3-like stores the
+    * production form is a metastore / table-format pointer flip. */
   private def swapMaster(updated: DataFrame, masterDir: String): Long = {
-    val next = s"$masterDir.next"
-    updated.write.mode("overwrite").parquet(next)
-    val spark = updated.sparkSession
-    val n = spark.read.parquet(next).count()
-    val (fs, dir) = fsFor(spark, masterDir)
-    val nextP = new org.apache.hadoop.fs.Path(next)
-    val oldP = new org.apache.hadoop.fs.Path(s"$masterDir.old")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(dir)) fs.rename(dir, oldP)
-    fs.rename(nextP, dir)
-    fs.delete(oldP, true)
+    updated.write.mode("overwrite").parquet(s"$masterDir.next")
+    val n = updated.sparkSession.read.parquet(s"$masterDir.next").count()
+    val (fs, dir) = fsFor(updated.sparkSession, masterDir)
+    swapDirs(fs, dir)
     n
+  }
+
+  private[graft] def swapDirs(fs: FileSystem, dir: Path): Unit = {
+    val old = dir.suffix(".old")
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(dir)) rename(fs, dir, old)
+    rename(fs, dir.suffix(".next"), dir)
+    fs.delete(old, true)
   }
 
   /** Start the daemon. `incomingDir` receives scrape landing files
     * (JSONL, [[freshSchema]]); `runDateOf(batchId)` pins each tick's
-    * "today" (determinism over current_date — tests pass a constant). */
-  /** Optional human-facing interchange: when `masterXlsxPath` is set,
+    * "today" (determinism over current_date — tests pass a constant).
+    * Optional human-facing interchange: when `masterXlsxPath` is set,
     * each tick also re-exports the updated master as a real .xlsx —
     * the reference's daily job maintains exactly this file
     * (fda_watcher.py:555 to_excel). Bounded by [[Xlsx.writeMaster]]'s
@@ -140,36 +144,31 @@ object ScheduledIngest {
   }
 
   /** One tick of the ingest lifecycle over a batch of fresh records
-    * ([[freshSchema]]): fingerprint + delta anti-join against the
-    * master, publish/quarantine split, master swap, optional .xlsx
-    * re-export, tick report. Shared by the JSONL-landing driver
-    * ([[start]]) and the HTML-page driver ([[startHtml]]). */
+    * ([[freshSchema]]), shared by [[start]] and [[startHtml]]. Every
+    * write and count reads one eager cut of the cleaned delta, so
+    * clean_corpus runs once per delta record. A cut, not persist: AQE
+    * coalesces a cut's output partitions but never a cached plan's, so
+    * a persisted delta would write a part file per shuffle partition. */
   private def runTick(spark: SparkSession, batch: DataFrame, batchId: Long,
       masterDir: String, publishDir: String, quarantineDir: String,
       runDateOf: Long => String, source: String,
       masterXlsxPath: Option[String], onTick: Tick => Unit): Unit = {
-    val b = batch.persist()
-    // published/quarantined plans re-read masterDir on every action,
-    // so BOTH are pinned (persist) and written BEFORE the master
-    // swap — an action after the swap would anti-join the updated
-    // master and see an empty delta
-    val master = loadMaster(spark, masterDir)
-    val res = FdaPipeline.run(b, master, runDateOf(batchId), source)
-    val p = res.published.persist()
-    val q = res.quarantined.persist()
+    val res = FdaPipeline.run(batch, loadMaster(spark, masterDir), runDateOf(batchId), source)
+    val delta = ScaleHints.cut(res.delta, ScaleHints.reliableConfigured(res.delta))
+    val out = res.copy(delta = delta)
     try {
       // per-batch overwrite (not a flat append): a foreachBatch RETRY
       // after a partial tick must not duplicate records — re-running
       // batch N rewrites batch=N in place, so publish is idempotent
       // like the quarantine split. Readers see one partitioned tree.
-      p.write.mode("overwrite").json(s"$publishDir/batch=$batchId")
-      q.write.mode("overwrite").json(s"$quarantineDir/batch=$batchId")
-      val (np, nq) = (p.count(), q.count())
-      val nm = swapMaster(res.updatedMaster, masterDir)
+      out.published.write.mode("overwrite").json(s"$publishDir/batch=$batchId")
+      out.quarantined.write.mode("overwrite").json(s"$quarantineDir/batch=$batchId")
+      val (np, nq) = (out.published.count(), out.quarantined.count())
+      val nm = swapMaster(out.updatedMaster, masterDir)
       masterXlsxPath.foreach(x =>
         graft.sources.Xlsx.writeMaster(spark.read.parquet(masterDir), x))
-      onTick(Tick(batchId, b.count(), np, nq, nm))
-    } finally { p.unpersist(); q.unpersist(); b.unpersist() }
+      onTick(Tick(batchId, batch.count(), np, nq, nm))
+    } finally ScaleHints.releaseCheckpoint(delta)
   }
 
   /** Per-fetched-detail-page schema for [[startHtml]]'s text join:

@@ -16,18 +16,23 @@ class PipelinesSpec extends AnyFunSuite {
     Files.createTempDirectory("graft_e2e").toString
 
   test("FDA lifecycle: delta → clean → publish → master update") {
-    val fresh = Seq(
+    // file-backed inputs: a local Seq folds into a LocalRelation, which
+    // would hide where Catalyst places the clean relative to the anti-join
+    val in = tmp()
+    Seq(
       ("https://x/1", "Drug A approval", "desc A", "01/01/2024",
         "FDA approves drug A for treatment.\nFollow the Oncology Center of Excellence on X now.\nUseful body long enough to pass the fifty character substance gate."),
       ("https://x/2", "Drug B approval", "desc B", "01/02/2024",
-        "short"), // dropped by the >50 gate
+        "short"), // fails the >50 gate
       ("https://x/3", "Drug C approval", "desc C", "01/03/2024",
-        "Existing doc that is already in the master table, with plenty of text to pass the gate.")
-    ).toDF("url", "title", "description", "date", "text")
-
+        "Existing doc that is already in the master table, with plenty of text to pass the gate."),
+      ("https://x/4", "Drug D approval", "desc D", "01/04/2024", null) // no text
+    ).toDF("url", "title", "description", "date", "text").write.json(s"$in/fresh")
     // master already contains url 3's fingerprint
-    val master = Seq(Tuple1("https://x/3")).toDF("url")
-      .select(md5(col("url")).as("rag_id"), col("url"))
+    Seq(Tuple1("https://x/3")).toDF("url")
+      .select(md5(col("url")).as("rag_id"), col("url")).write.parquet(s"$in/master")
+    val fresh = spark.read.schema(graft.streaming.ScheduledIngest.freshSchema).json(s"$in/fresh")
+    val master = spark.read.parquet(s"$in/master")
 
     val r = FdaPipeline.run(fresh, master, runDate = "2026-01-01")
     val published = r.published.collect()
@@ -37,8 +42,28 @@ class PipelinesSpec extends AnyFunSuite {
     assert(!row.getAs[String]("content").contains("Follow the Oncology Center"))
     assert(row.getAs[String]("source") == "fda_oncology")
     assert(row.getAs[String]("version") == "1.0")
-    // master grew by exactly the published delta
-    assert(r.updatedMaster.count() == 2)
+    // the short and the null text both fail the gate into quarantine
+    // (a NULL corpus must not drop out of both branches)
+    assert(r.quarantined.select("url").as[String].collect().toSet ==
+      Set("https://x/2", "https://x/4"))
+    // master grew by exactly the published delta; the row already in the
+    // master is in no output and stays in the master once
+    val mastered = r.updatedMaster.select("url").as[String].collect()
+    assert(mastered.sorted.toSeq == Seq("https://x/1", "https://x/3"))
+    assert(r.delta.select("url").as[String].collect().toSet ==
+      Set("https://x/1", "https://x/2", "https://x/4"))
+
+    // the delta cleans only what survives the anti-join
+    val plan = r.delta.queryExecution.optimizedPlan
+    def cleans(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.expr.CleanCorpusExpr]))
+    val antiJoins = plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+        if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    }
+    assert(antiJoins.size == 1, plan)
+    assert(!antiJoins.head.exists(cleans), plan)
+    assert(plan.exists(cleans), plan)
   }
 
   test("PDF lifecycle: convert → doi/title enrich → verify → output") {

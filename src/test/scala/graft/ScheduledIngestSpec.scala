@@ -1,9 +1,19 @@
 package graft
 
+import java.io.IOException
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.streaming.ScheduledIngest
 
@@ -184,5 +194,134 @@ class ScheduledIngestSpec extends AnyFunSuite {
       q.stop()
       scala.reflect.io.Directory(root.toFile).deleteRecursively()
     }
+  }
+
+  /** Every physical node of an executed plan, through AQE stages and
+    * cached relations. */
+  private def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _ => p.children.map(_.asInstanceOf[QueryPlan[_]]) ++ p.innerChildren
+  }).flatMap(nodes)
+
+  private def cleans(p: QueryPlan[_]): Boolean =
+    p.expressions.exists(_.exists(_.isInstanceOf[graft.expr.CleanCorpusExpr]))
+
+  test("a tick cleans each delta record once, above the anti-join, and pins nothing") {
+    val root = Files.createTempDirectory("graft_sched_once")
+    def dir(n: String): String = { val p = root.resolve(n); Files.createDirectories(p); p.toString }
+    val incoming = dir("incoming")
+    val masterDir = s"$root/master"
+
+    // (executed plan, is a marker) in delivery order; the stream runs on
+    // a clone of the session, which copies the listener when created
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(SparkPlan, Boolean)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add((qe.executedPlan, nodes(qe.executedPlan).exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.RangeExec])))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // listener delivery is async but ordered: a marker query run after a
+    // tick arrives after all of that tick's plans
+    def drain(): List[SparkPlan] = {
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!plans.iterator.asScala.exists(_._2) && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      val out = List.newBuilder[SparkPlan]
+      var marked = false
+      while (!marked && !plans.isEmpty) {
+        val (p, m) = plans.poll()
+        if (m) marked = true else out += p
+      }
+      assert(marked, "marker query never reached the listener")
+      out.result()
+    }
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val cacheWasEmpty = spark.sharedState.cacheManager.isEmpty
+
+    val ticks = new java.util.concurrent.ConcurrentLinkedQueue[ScheduledIngest.Tick]()
+    Files.writeString(Path.of(incoming, "scrape1.json"),
+      rec("https://x/1", "Drug A", longText) + "\n")
+    val q = ScheduledIngest.start(spark, incoming, masterDir, dir("publish"),
+      dir("quarantine"), s"$root/ckpt",
+      trigger = Trigger.ProcessingTime("500 milliseconds"),
+      runDateOf = _ => "2026-01-01",
+      onTick = ticks.add(_))
+    try {
+      def waitTicks(n: Int): Unit = {
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (ticks.size < n && System.nanoTime() < deadline) Thread.sleep(100)
+        assert(ticks.size >= n, s"stream produced ${ticks.size} ticks, wanted $n")
+      }
+      waitTicks(1)
+      drain()
+      // tick 2 runs against a non-empty master (an empty one removes the
+      // join): a re-landed known record, a new passing and a new failing one
+      Files.writeString(Path.of(incoming, "scrape2.json"),
+        rec("https://x/1", "Drug A", longText) + "\n" +
+        rec("https://x/3", "Drug C", longText) + "\n" +
+        rec("https://x/4", "Drug D", "too short") + "\n")
+      waitTicks(2)
+      val t2 = ticks.toArray(Array.empty[ScheduledIngest.Tick]).last
+      assert((t2.nFresh, t2.nPublished, t2.nQuarantined, t2.nMaster) == (3, 1, 1, 2))
+      val tick2 = drain()
+      val shown = tick2.mkString("\n---\n")
+      assert(tick2.exists(p => nodes(p).exists(_.isInstanceOf[BaseJoinExec])), shown)
+      for (p <- tick2; j <- nodes(p) if j.isInstanceOf[BaseJoinExec])
+        assert(!nodes(j).exists(cleans), s"clean_corpus below a join:\n$p")
+      assert(tick2.count(p => nodes(p).exists(cleans)) == 1, shown)
+
+      // the tick's cut is released in its `finally`, just after `onTick`
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).isEmpty)
+      assert(!cacheWasEmpty || spark.sharedState.cacheManager.isEmpty)
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+      scala.reflect.io.Directory(root.toFile).deleteRecursively()
+    }
+  }
+
+  /** A local FS that refuses the renames `refused` picks: nothing moves
+    * and `rename` returns false, as a full or read-only store reports. */
+  private class RefusingRenameFs(refused: HPath => Boolean) extends RawLocalFileSystem {
+    initialize(java.net.URI.create("file:///"), new Configuration())
+    override def rename(src: HPath, dst: HPath): Boolean =
+      !refused(dst) && super.rename(src, dst)
+  }
+
+  test("master swap: a refused rename fails the tick, never nests .next in the master") {
+    val root = Files.createTempDirectory("graft_swap")
+    def complete(d: String): HPath = {
+      Files.createDirectories(root.resolve(d))
+      Files.writeString(root.resolve(d).resolve("_SUCCESS"), "")
+      new HPath(root.resolve(d).toString)
+    }
+    try {
+      val master = complete("master")
+      val next = complete("master.next")
+      // master → .old refused: an unchecked swap would go on to move
+      // .next INSIDE the live master, and reads would keep the old rows
+      val fs = new RefusingRenameFs(_.getName.endsWith(".old"))
+      val e = intercept[IOException](ScheduledIngest.swapDirs(fs, master))
+      assert(e.getMessage.contains(s"$master -> ${master.suffix(".old")}"), e.getMessage)
+      assert(fs.exists(new HPath(next, "_SUCCESS")))
+      assert(!fs.exists(new HPath(master, "master.next")))
+
+      // recovery from a complete .next with the master gone: a refused
+      // rename throws instead of loading from an empty master
+      fs.delete(master, true)
+      val e2 = intercept[IOException](
+        ScheduledIngest.recoverMaster(new RefusingRenameFs(_ => true), master))
+      assert(e2.getMessage.contains(s"$next -> $master"), e2.getMessage)
+      // an accepting FS recovers it
+      ScheduledIngest.recoverMaster(fs, master)
+      assert(fs.exists(new HPath(master, "_SUCCESS")) && !fs.exists(next))
+    } finally scala.reflect.io.Directory(root.toFile).deleteRecursively()
   }
 }

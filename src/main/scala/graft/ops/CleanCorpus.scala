@@ -67,43 +67,51 @@ object CleanCorpus {
     * Nd) — Java's default `\d` is ASCII [0-9]. */
   private[graft] val PyD = "\\p{Nd}"
 
-  // json_split_and_clean.py:37-59
-  private val cutoffPatterns: Array[Pattern] = Array(
-    ".*This review.*used.*Assessment Aid.*",
-    ".*This review was conducted.*Assessment Aid.*",
-    ".*This review used.*Real-Time Oncology Review.*",
-    ".*This review used.*RTOR.*",
-    ".*This review was conducted under Project Orbis.*",
-    ".*The application was granted.*priority review.*",
-    ".*The application was granted.*breakthrough.*",
-    ".*The application was granted.*orphan.*",
-    ".*granted.*priority review.*",
-    ".*granted.*breakthrough designation.*",
-    ".*granted.*orphan drug designation.*",
-    ".*received.*orphan drug designation.*",
-    ".*received.*breakthrough designation.*",
-    ".*received.*priority review.*"
-  ).map(ci)
+  /** One compiled pattern per class: the reference's patterns, without
+    * their framing `.*`, joined into one alternation. The reference tests
+    * a line against each pattern in turn; "any of them matches" is one
+    * search of the alternation. Framed as `.*A.*B.*`, `find()` backtracks
+    * roughly cubically in line length; unframed, an alternative whose
+    * literal head fails costs one compare per start position. Alternatives
+    * that another one already covers are left out (named below). The
+    * DuckDB oracle (SparkEntry.f1TraceSql) spells the same three classes. */
+  private def anyOf(alternatives: Seq[String]): Pattern =
+    ci(alternatives.mkString("|"))
 
-  // json_split_and_clean.py:64-93 (start-anchored: Python re.match)
-  private val removePatterns: Array[Pattern] = Array(
-    "^Follow the Oncology Center of Excellence.*",
-    "^Follow the Oncology Center of Excellence on X.*",
-    "^Follow the Oncology Center of Excellence on X \\(formerly Twitter\\).*",
-    "^Follow the Oncology Center of Excellence on Twitter.*",
-    "^Follow us on X.*",
-    "^Healthcare professionals should report all serious adverse events.*",
-    s"^Full prescribing information for$PyWs+.*",
-    s"^View full prescribing information for$PyWs+.*",
-    s"^See full prescribing information for$PyWs+.*",
-    "^For assistance with single-patient INDs for investigational oncology products.*",
-    "^FDA expedited programs are described in the Guidance for Industry.*",
-    "^A description of FDA expedited programs is in the Guidance.*",
-    "^FDA expedited programs are described in the Guidance.*",
-    "^For information on the COVID-19 pandemic.*",
-    "^FDA: Coronavirus Disease 2019 \\(COVID-19\\).*",
-    "^CDC: Coronavirus \\(COVID-19\\).*"
-  ).map(ci)
+  // json_split_and_clean.py:37-59 (re.search, so find()); "The application
+  // was granted.*priority review" is covered by "granted.*priority review"
+  private val cutoff: Pattern = anyOf(Seq(
+    "This review.*used.*Assessment Aid",
+    "This review was conducted.*Assessment Aid",
+    "This review used.*Real-Time Oncology Review",
+    "This review used.*RTOR",
+    "This review was conducted under Project Orbis",
+    "The application was granted.*breakthrough",
+    "The application was granted.*orphan",
+    "granted.*priority review",
+    "granted.*breakthrough designation",
+    "granted.*orphan drug designation",
+    "received.*orphan drug designation",
+    "received.*breakthrough designation",
+    "received.*priority review"))
+
+  // json_split_and_clean.py:64-93 (re.match, so lookingAt()); "Follow the
+  // Oncology Center of Excellence" covers its "on X", "on X (formerly
+  // Twitter)" and "on Twitter" variants, and "FDA expedited programs are
+  // described in the Guidance" covers its "… for Industry" variant
+  private val boilerplate: Pattern = anyOf(Seq(
+    "Follow the Oncology Center of Excellence",
+    "Follow us on X",
+    "Healthcare professionals should report all serious adverse events",
+    s"Full prescribing information for$PyWs",
+    s"View full prescribing information for$PyWs",
+    s"See full prescribing information for$PyWs",
+    "For assistance with single-patient INDs for investigational oncology products",
+    "A description of FDA expedited programs is in the Guidance",
+    "FDA expedited programs are described in the Guidance",
+    "For information on the COVID-19 pandemic",
+    "FDA: Coronavirus Disease 2019 \\(COVID-19\\)",
+    "CDC: Coronavirus \\(COVID-19\\)"))
 
   // json_split_and_clean.py:96-100 (exact standalone lines, case-sensitive)
   private val headersToRemove: Set[String] =
@@ -111,22 +119,21 @@ object CleanCorpus {
 
   // json_split_and_clean.py:123-131 (re.search with IGNORECASE on str:
   // \d and \s are UNICODE classes — see PyWs/PyD)
-  private val dosagePatterns: Array[Pattern] = Array(
-    s".*$PyD+$PyWs*(kg|mg|g|mcg).*",
-    s".*less than.*$PyD+.*",
-    s".*greater than.*$PyD+.*",
-    s".*$PyD+$PyWs*(or|and)$PyWs*(greater|less).*",
-    ".*orally.*twice.*daily.*",
-    ".*orally.*once.*daily.*",
-    ".*mg.*orally.*"
-  ).map(ci)
+  private val dosage: Pattern = anyOf(Seq(
+    s"$PyD+$PyWs*(kg|mg|g|mcg)",
+    s"less than.*$PyD",
+    s"greater than.*$PyD",
+    s"$PyD+$PyWs*(or|and)$PyWs*(greater|less)",
+    "orally.*twice.*daily",
+    "orally.*once.*daily",
+    "mg.*orally"))
 
   /** CASE_INSENSITIVE+UNICODE_CASE = CPython re.IGNORECASE on str (both
     * simple-casefold: ſ→s, K→k). UNIX_LINES makes Java's '.' exclude only
     * \n — CPython re and RE2 semantics — where default Java '.' also
     * excludes \r, U+0085, U+2028, U+2029. Lines here never contain \n but
     * CAN contain an interior \r (a bare-\r-endings document collapses to
-    * one line), so without UNIX_LINES a '.*'-spanning pattern like
+    * one line), so without UNIX_LINES an interior '.*' like
     * "granted.*priority review" would match in the reference and the
     * oracle but not here. ^ is unaffected (no MULTILINE). */
   private def ci(p: String): Pattern =
@@ -147,26 +154,25 @@ object CleanCorpus {
     s.substring(i, j)
   }
 
-  private def isDosage(s: String): Boolean = {
-    var k = 0
-    while (k < dosagePatterns.length) {
-      if (dosagePatterns(k).matcher(s).find()) return true
-      k += 1
-    }
-    false
-  }
-
   /** Dosage info in `lines(from until untilExcl)` (stripped, non-empty)? */
   private def dosageAhead(lines: Array[String], from: Int, untilExcl: Int): Boolean = {
     var k = from
     val end = math.min(untilExcl, lines.length)
     while (k < end) {
       val l = pyStrip(lines(k))
-      if (l.nonEmpty && isDosage(l)) return true
+      if (l.nonEmpty && dosage.matcher(l).find()) return true
       k += 1
     }
     false
   }
+
+  /** Dosage info within 15 lines after the cutoff line `idx` (:152-168),
+    * or within 15 lines after a ':'-terminated line among them (:170-183)? */
+  private def dosageFollows(lines: Array[String], idx: Int): Boolean =
+    dosageAhead(lines, idx + 1, idx + ExtendedLookahead + 1) ||
+      (idx + 1 until math.min(idx + ExtendedLookahead + 1, lines.length))
+        .exists(la => pyStrip(lines(la)).endsWith(":") &&
+          dosageAhead(lines, la + 1, la + ExtendedLookahead + 1))
 
   /** Per-line decision codes — THE ORACLE TRACE for `f1_clean_corpus`.
     *
@@ -203,52 +209,23 @@ object CleanCorpus {
       if (truncated) out(idx) = 'T'
       else {
         val stripped = pyStrip(lines(idx))
+        val prevColon = lastAppended != null && lastAppended.endsWith(":")
         if (stripped.isEmpty) {
           // blank kept only right after a ':'-terminated kept line (:113-118)
-          if (lastAppended != null && lastAppended.endsWith(":")) {
-            out(idx) = 'B'; lastAppended = ""
-          } else out(idx) = 'E'
+          if (prevColon) { out(idx) = 'B'; lastAppended = "" }
+          else out(idx) = 'E'
         } else {
-          var isCutoff = false
-          var rescued = false
-          var p = 0
-          while (p < cutoffPatterns.length && !isCutoff && !rescued) {
-            if (cutoffPatterns(p).matcher(stripped).find()) {
-              val prevSuggestsList =
-                lastAppended != null && lastAppended.endsWith(":")
-              var followup = false
-              // direct 15-line lookahead for dosage info (:152-168)
-              var la = idx + 1
-              val laEnd = math.min(idx + ExtendedLookahead + 1, lines.length)
-              while (la < laEnd && !followup) {
-                val look = pyStrip(lines(la))
-                if (look.nonEmpty) {
-                  if (isDosage(look)) followup = true
-                  // a later ':' line opens a further 15-line window (:170-183)
-                  else if (look.endsWith(":") &&
-                    dosageAhead(lines, la + 1, la + ExtendedLookahead + 1))
-                    followup = true
-                }
-                la += 1
-              }
-              // the rescue condition is pattern-independent, so the
-              // reference's per-pattern re-check (p += 1, match again,
-              // rescue again) collapses to: rescued once ⇒ rescued for
-              // all remaining patterns — the line falls through
-              if (followup || prevSuggestsList) rescued = true
-              else isCutoff = true
-            } else p += 1
-          }
-          if (isCutoff) { out(idx) = 'C'; truncated = true }
+          // the reference re-tests the rescue for every cutoff pattern the
+          // line matches, but the rescue does not depend on the pattern:
+          // one match decides, and a rescued line falls through (:149-190)
+          val cut = cutoff.matcher(stripped).find()
+          val rescued = cut && (prevColon || dosageFollows(lines, idx))
+          if (cut && !rescued) { out(idx) = 'C'; truncated = true }
+          else if (boilerplate.matcher(stripped).lookingAt()) out(idx) = 'P'
+          else if (headersToRemove.contains(stripped)) out(idx) = 'H'
           else {
-            val boilerplate =
-              removePatterns.exists(_.matcher(stripped).lookingAt())
-            if (boilerplate) out(idx) = 'P'
-            else if (headersToRemove.contains(stripped)) out(idx) = 'H'
-            else {
-              out(idx) = if (rescued) 'R' else 'K'
-              lastAppended = stripped
-            }
+            out(idx) = if (rescued) 'R' else 'K'
+            lastAppended = stripped
           }
         }
       }

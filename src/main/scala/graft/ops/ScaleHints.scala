@@ -212,12 +212,21 @@ private[graft] object ScaleHints {
     * Spark upgrade changes the root shape (or a caller passes a derived
     * frame), the match misses and the blocks leak until the session's
     * ContextCleaner gets them — a deliberate degradation, never a wrong
-    * result. CALLER CONTRACT: pass the checkpointed frame ITSELF, and
-    * the frame must be dead — any later read of it fails. */
+    * result. A reliable cut's checkpoint files are deleted too: Spark
+    * leaves them behind unless `spark.cleaner.referenceTracking.
+    * cleanCheckpoints` is set, so a daemon cutting every tick would grow
+    * its checkpoint dir without bound. CALLER CONTRACT: pass the
+    * checkpointed frame ITSELF, and the frame must be dead — any later
+    * read of it fails. */
   def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.optimizedPlan match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(false)
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ => ()
     }
 }

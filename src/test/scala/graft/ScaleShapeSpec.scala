@@ -422,4 +422,28 @@ class ScaleShapeSpec extends AnyFunSuite {
     val wide = docs.repartition(spark.sparkContext.defaultParallelism * 2)
     assert(graft.ops.ScaleHints.fanout(wide) eq wide)
   }
+
+  test("releasing a reliable cut deletes its checkpoint files") {
+    val sc = spark.sparkContext
+    val ckptDir = java.nio.file.Files
+      .createTempDirectory("graft_release_ckpt").toString
+    try {
+      sc.setCheckpointDir(ckptDir)
+      val cut = graft.ops.ScaleHints.cut(spark.range(100).toDF("id"),
+        reliable = true)
+      assert(cut.count() == 100)
+      def files(d: java.io.File): Int =
+        if (d.isDirectory) d.listFiles().map(files).sum else 1
+      val root = new java.io.File(ckptDir)
+      assert(files(root) > 0, s"no checkpoint files under $ckptDir")
+      graft.ops.ScaleHints.releaseCheckpoint(cut)
+      assert(files(root) == 0, s"checkpoint files left under $ckptDir")
+    } finally {
+      // no public un-set for the checkpoint dir: re-point it at a fresh
+      // temp dir that outlives the suite, as PageRankSpec does
+      sc.setCheckpointDir(java.nio.file.Files
+        .createTempDirectory("graft_ckpt_rest").toString)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))
+    }
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge.{toCol => column, toExpr => expression}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.{CleanCorpus, DoiExtract, HtmlExtract, Similarity}
@@ -16,6 +16,9 @@ import graft.ops.{CleanCorpus, DoiExtract, HtmlExtract, Similarity}
 object ExprRuntime {
   def ratcliff(a: UTF8String, b: UTF8String): Double =
     Similarity.ratio(a.toString, b.toString)
+
+  def ratcliffAtLeast(a: UTF8String, b: UTF8String, t: Double): Boolean =
+    Similarity.atLeast(a.toString, b.toString, t)
 
   def cleanCorpus(t: UTF8String): UTF8String =
     UTF8String.fromString(CleanCorpus.clean(t.toString))
@@ -51,6 +54,28 @@ case class RatcliffSimilarity(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = graft.expr.ExprRuntime.ratcliff($a, $b);")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+    copy(left = l, right = r)
+}
+
+/** F12 as a threshold test — `similarity_at_least(a, b, t)` equals
+  * `similarity(a, b) >= t` (null in, null out) but runs
+  * [[graft.ops.Similarity.atLeast]]'s length and multiset bounds first, so
+  * a theta-join condition pays the Ratcliff/Obershelp search only for the
+  * pairs that can reach `t`. */
+case class RatcliffAtLeast(left: Expression, right: Expression, threshold: Double)
+    extends BinaryExpression {
+  override def dataType: DataType = BooleanType
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ExprRuntime.ratcliffAtLeast(
+      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], threshold)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the threshold's exact bits: no decimal rendering moves the tie, and
+    // NaN or an infinity still compiles
+    val t = s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(threshold)}L)"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.ExprRuntime.ratcliffAtLeast($a, $b, $t);")
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -130,6 +155,8 @@ case class BpeEncodeExpr(child: Expression, model: graft.ops.Bpe.BpeModel)
 object functions {
   def similarity(a: Column, b: Column): Column =
     column(RatcliffSimilarity(expression(a), expression(b)))
+  def similarity_at_least(a: Column, b: Column, threshold: Double): Column =
+    column(RatcliffAtLeast(expression(a), expression(b), threshold))
   def clean_corpus(c: Column): Column = column(CleanCorpusExpr(expression(c)))
   def extract_doi(c: Column): Column = column(ExtractDoiExpr(expression(c)))
   def extract_doi(c: Column, maxChars: Int): Column =

@@ -22,6 +22,10 @@ package graft.ops
   * GC wall). All working state lives in per-thread reusable buffers
   * (char-indexed position tables, dense diagonal-run arrays, an int-array
   * block stack), cleared incrementally via touched-lists.
+  *
+  * A threshold test (a theta-join's `ratio >= t`) goes through [[atLeast]],
+  * which first tries difflib's two exact upper bounds, length and
+  * character multiset, and runs the search only when both can reach `t`.
   */
 object Similarity {
 
@@ -51,6 +55,17 @@ object Similarity {
       }
       touched(nTouched) = c
       nTouched += 1
+    }
+    /** Clear, then count each char of `b` into `count`. */
+    def countChars(b: String): Unit = {
+      clear()
+      var j = 0
+      while (j < b.length) {
+        val c = b.charAt(j)
+        if (count(c) == 0) touch(c)
+        count(c) += 1
+        j += 1
+      }
     }
   }
 
@@ -88,22 +103,57 @@ object Similarity {
       rawBlocksCp(aa, bb).foreach(t => m += t._3)
       return 2.0 * m / (aa.length + bb.length)
     }
+    bmpRatio(a, b)
+  }
+
+  /** `ratio(a, b) >= t`, through difflib's own pruning cascade
+    * (`get_close_matches`: `real_quick_ratio`, then `quick_ratio`, then
+    * `ratio`), so most pairs of a threshold join never reach the
+    * Ratcliff/Obershelp search:
+    *  1. length bound `2·min(la,lb)/(la+lb)`;
+    *  2. multiset bound `2·m/(la+lb)`, m = Σ_c min(#c in a, #c in b),
+    *     counted in the per-thread [[Scratch]] tables (no allocation);
+    *  3. the exact [[ratio]].
+    * Both bounds are exact upper bounds on the ratio: every matched
+    * character pairs one position of `a` with one of `b` holding the same
+    * char, each position at most once, so matches <= m <= min(la,lb).
+    * Autojunk changes which blocks are found, never that a matched pair
+    * holds equal chars, so the bounds hold in that regime too (difflib's
+    * `quick_ratio` counts the full `b`, not b2j). Each bound is evaluated with
+    * the kernel's own `2.0 * n / (la + lb)` expression, monotone in n, so a
+    * pair whose ratio equals `t` exactly is never rejected (the `>=` tie
+    * holds). Surrogate-bearing strings go straight to [[ratio]], whose
+    * lengths count code points; `la + lb == 0` keeps its 1.0. */
+  def atLeast(a: String, b: String, t: Double): Boolean = {
+    if (a == null || b == null || hasSurrogate(a) || hasSurrogate(b))
+      return ratio(a, b) >= t
+    val la = a.length
+    val lb = b.length
+    if (la + lb == 0) return 1.0 >= t
+    if (2.0 * math.min(la, lb) / (la + lb) < t) return false
+    val sc = scratchTL.get()
+    sc.countChars(b)
+    var m = 0
+    var i = 0
+    while (i < la) {
+      val c = a.charAt(i)
+      if (sc.count(c) > 0) { sc.count(c) -= 1; m += 1 }
+      i += 1
+    }
+    if (2.0 * m / (la + lb) < t) return false
+    bmpRatio(a, b) >= t
+  }
+
+  /** [[ratio]] for two non-null strings without surrogates. */
+  private def bmpRatio(a: String, b: String): Double = {
     val la = a.length
     val lb = b.length
     if (la + lb == 0) return 1.0
     if (la == 0 || lb == 0) return 0.0
 
     val sc = scratchTL.get()
-    sc.clear()
-
     // ── b2j: positions of each char of b, ascending (difflib __chain_b) ──
-    var j = 0
-    while (j < lb) {
-      val c = b.charAt(j)
-      if (sc.count(c) == 0) sc.touch(c)
-      sc.count(c) += 1
-      j += 1
-    }
+    sc.countChars(b)
     // autojunk: popular chars dropped from the index but flagged junk
     if (lb >= 200) {
       val ntest = lb / 100 + 1

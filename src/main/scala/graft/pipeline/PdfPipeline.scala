@@ -68,7 +68,13 @@ object PdfPipeline {
   /** Phase 2: enrichment against a PubMed dimension + verification.
     * Two-step lookup mirroring _search_pubmed (DOI first, then title):
     * both become broadcast joins; the title path carries the exact
-    * Ratcliff/Obershelp >= 0.90 gate. */
+    * Ratcliff/Obershelp >= 0.90 gate. The title path is a nested-loop
+    * theta-join (J3), so its cost is per pair: both titles are normalized
+    * once per row before the join, and the condition is
+    * `similarity_at_least`, which rejects a pair on difflib's length or
+    * character-multiset upper bound before it runs the Ratcliff search.
+    * Both bounds are exact (see [[graft.ops.Similarity.atLeast]]), so the
+    * matched pairs are those of `similarity(...) >= 0.90`. */
   def enrich(docs: DataFrame, pubmedDim: DataFrame): DataFrame = {
     val dim = pubmedDim.select(
       TextOps.normalizeDoi(col("doi")).as("dim_doi_norm"),
@@ -80,14 +86,16 @@ object PdfPipeline {
       .join(broadcast(dim), col("doi_norm") === col("dim_doi_norm"), "left_outer")
 
     // title path only where the DOI path failed (reference order, :397-409)
+    // each side's title is normalized once, not once per pair
     val needTitle = withDoiMatch.filter(col("dim_doi_norm").isNull)
       .drop(dim.columns.toIndexedSeq: _*)
-    val titleDim = broadcast(dim.withColumnRenamed("dim_doi_norm", "t_doi_norm"))
+      .withColumn("title_cmp", TextOps.normalizeForCompare(col("title")))
+    val titleDim = broadcast(dim.withColumnRenamed("dim_doi_norm", "t_doi_norm")
+      .withColumn("dim_title_cmp", TextOps.normalizeForCompare(col("dim_title"))))
     val titleMatched = needTitle.join(titleDim,
-        gf.similarity(
-          TextOps.normalizeForCompare(col("title")),
-          TextOps.normalizeForCompare(col("dim_title"))) >= 0.90,
+        gf.similarity_at_least(col("title_cmp"), col("dim_title_cmp"), 0.90),
         "left_outer")
+      .drop("title_cmp", "dim_title_cmp")
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("path"))
           .orderBy(col("pmid").asc_nulls_last)))

@@ -30,6 +30,7 @@ object DeferExpensivePredicates extends Rule[LogicalPlan] with PredicateHelper {
     * array payload (vs an O(1) comparison or length check). */
   private def isExpensive(e: Expression): Boolean = e.exists {
     case _: graft.expr.RatcliffSimilarity => true
+    case _: graft.expr.RatcliffAtLeast => true
     case _: graft.expr.CleanCorpusExpr => true
     case _: graft.expr.ExtractDoiExpr => true
     case _: graft.expr.HtmlTextExpr => true

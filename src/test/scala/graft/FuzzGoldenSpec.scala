@@ -65,6 +65,30 @@ class FuzzGoldenSpec extends AnyFunSuite {
     assert(checked == 505)
   }
 
+  test("similarity atLeast == (ratio >= t) on the 505 fuzz pairs " +
+      "(empty, supplementary-plane, autojunk), the tie included") {
+    val goldens = Goldens.load("similarity_fuzz")
+    goldens.foreach { g =>
+      SimilaritySpec.agrees(Goldens.str(g("a")), Goldens.str(g("b")),
+        Goldens.dbl(g("ratio")))
+    }
+    assert(goldens.size == 505)
+  }
+
+  test("similarity_at_least in a select: null in, null out; values agree " +
+      "with similarity >= t") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq(("examplinix", "examplinib"), ("kitten", "sitting"),
+      (null, "x"), ("x", null)).toDF("a", "b")
+    val got = df.select(
+      graft.expr.functions.similarity_at_least(col("a"), col("b"), 0.9),
+      graft.expr.functions.similarity(col("a"), col("b")) >= 0.9).collect()
+    assert(got.map(r => Option(r.get(0))).toSeq ==
+      Seq(Some(true), Some(false), None, None))
+    assert(got.forall(r => r.get(0) == r.get(1)))
+  }
+
   test("matching blocks match difflib on 80 unicode/supplementary fuzz " +
       "pairs (codepoint indices)") {
     val goldens = Goldens.load("matching_blocks_fuzz")

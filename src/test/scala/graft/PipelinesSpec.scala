@@ -75,18 +75,42 @@ class PipelinesSpec extends AnyFunSuite {
       // DOI conflict: title matches dim row 1 exactly, but the local DOI
       // differs from that row's DOI → verify() vetoes (pubmed_enrichment
       // .py:277-284 returns unverified before the title check is reached)
-      ("f4.pdf", mk("# Paper One Exact\n\nBody doi: 10.9999/conflict.404 x."))
+      ("f4.pdf", mk("# Paper One Exact\n\nBody doi: 10.9999/conflict.404 x.")),
+      // the 0.90 gate's tie: "examplinix" vs "examplinib", 9 of 10 chars
+      // matched, ratio 18/20 == 0.90 exactly → verified
+      ("f5.pdf", mk("# Examplinix\n\nNo doi here either.")),
+      // just under the gate: 17 of 19 matched, ratio 34/38 ≈ 0.895
+      ("f6.pdf", mk("# Zorbatinib Effixazy\n\nNo doi here either."))
     ).toDF("path", "content")
 
     val dim = Seq(
       ("10.1234/jex.2023.001", "Paper One Exact", "J One", "2023",
         Seq("Smith, J"), "111"),
       (null, "A Study of Examplinib in Mice", "J Two", "2022",
-        Seq("Doe, A", "Roe, B"), "222")
+        Seq("Doe, A", "Roe, B"), "222"),
+      (null, "Examplinib", "J Three", "2021", Seq("Poe, C"), "333"),
+      (null, "Zorbatinib Efficacy", "J Four", "2020", Seq("Loe, D"), "444")
     ).toDF("doi", "title", "journal", "year", "authors", "pmid")
+
+    // the title join's condition is the threshold kernel over titles
+    // normalized below the join: no regex pass and no full ratio per pair
+    val plan = PdfPipeline.run(binaries, dim).queryExecution.optimizedPlan
+    val titleJoins = plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+        if j.condition.exists(_.exists(e =>
+          e.isInstanceOf[graft.expr.RatcliffSimilarity] ||
+          e.isInstanceOf[graft.expr.RatcliffAtLeast])) => j.condition.get
+    }
+    assert(titleJoins.size == 1, plan)
+    val cond = titleJoins.head
+    assert(cond.exists(_.isInstanceOf[graft.expr.RatcliffAtLeast]), cond)
+    assert(!cond.exists(_.isInstanceOf[graft.expr.RatcliffSimilarity]), cond)
+    assert(!cond.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.RegExpReplace]), cond)
 
     val out = PdfPipeline.run(binaries, dim).collect()
       .map(r => r.getAs[String]("path") -> r).toMap
+    assert(out.size == 6)
 
     assert(out("f1.pdf").getAs[Boolean]("verified"))
     assert(out("f1.pdf").getAs[String]("Link") == "https://doi.org/10.1234/jex.2023.001")
@@ -104,6 +128,12 @@ class PipelinesSpec extends AnyFunSuite {
     assert(out("f3.pdf").getAs[String]("Citation") ==
       "Document. Completely Unrelated. (Unverified)")
     assert(out("f3.pdf").getAs[String]("Link") == "https://pubmed.ncbi.nlm.nih.gov")
+
+    assert(out("f5.pdf").getAs[Boolean]("verified"))   // ratio == 0.90
+    assert(out("f5.pdf").getAs[String]("Link") == "https://pubmed.ncbi.nlm.nih.gov/333")
+    assert(!out("f6.pdf").getAs[Boolean]("verified"))  // ratio ≈ 0.895
+    assert(out("f6.pdf").getAs[String]("Citation") ==
+      "Document. Zorbatinib Effixazy. (Unverified)")
   }
 
   test("JSONL publish lifecycle over a real directory tree") {

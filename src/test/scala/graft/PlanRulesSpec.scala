@@ -34,7 +34,8 @@ class PlanRulesSpec extends AnyFunSuite {
 
   private def hasKernel(
       e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-    e.exists(_.isInstanceOf[graft.expr.RatcliffSimilarity])
+    e.exists(e => e.isInstanceOf[graft.expr.RatcliffSimilarity] ||
+      e.isInstanceOf[graft.expr.RatcliffAtLeast])
 
   // NOT a LocalRelation (ConvertToLocalRelation would evaluate the whole
   // filter at optimize time and leave no Filter node to inspect): Range
@@ -60,6 +61,21 @@ class PlanRulesSpec extends AnyFunSuite {
     // semantics unchanged: same rows as the hand-ordered filter
     assert(q.collect().map(_.getString(0)).sorted.toSeq ==
       Seq("kitten"))
+  }
+
+  test("the threshold kernel similarity_at_least is deferred too " +
+      "(DataFrame API)") {
+    import org.apache.spark.sql.functions.{col, length}
+    val s = extSession()
+    pairsView(s, "p3")
+    val q = s.table("p3").filter(
+      graft.expr.functions.similarity_at_least(col("a"), col("b"), 0.3) &&
+        length(col("a")) < 10)
+    val cs = conjuncts(q)
+    assert(cs.size >= 2, s"expected a surviving conjunction: $cs")
+    assert(!hasKernel(cs.head), s"cheap predicate should come first: $cs")
+    assert(hasKernel(cs.last), s"kernel predicate should be deferred last: $cs")
+    assert(q.collect().map(_.getString(0)).sorted.toSeq == Seq("kitten"))
   }
 
   test("already-cheap-first and kernel-only filters are left untouched") {

@@ -133,4 +133,51 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.ratio(null, "x") == 0.0)
     assert(Similarity.ratio("x", null) == 0.0)
   }
+
+  // ── atLeast: ratio >= t through the length and multiset bounds ──────
+  test("atLeast == (ratio >= t) on every ratio and autojunk-divergence " +
+      "golden, empty and surrogate pairs, at fixed thresholds and the tie") {
+    val pairs = (Goldens.load("similarity") ++ Goldens.load("similarity_divergent"))
+      .map(g => (Goldens.str(g("a")), Goldens.str(g("b")), Goldens.dbl(g("ratio"))))
+    val extra = Seq(("", ""), ("", "x"), ("x", ""), (null, "x"), ("x", null),
+      ("a\uD83D\uDE00b", "a\uD83D\uDE00c"), ("\uD83D\uDE00", "\uD83D\uDE01"))
+      .map { case (a, b) => (a, b, Similarity.ratio(a, b)) }
+    (pairs ++ extra).foreach { case (a, b, r) => SimilaritySpec.agrees(a, b, r) }
+  }
+
+  test("atLeast rejects on the length bound, on the multiset bound, " +
+      "and on the exact ratio, each as ratio >= t does") {
+    def lenBound(a: String, b: String) =
+      2.0 * math.min(a.length, b.length) / (a.length + b.length)
+    def setBound(a: String, b: String) = {
+      val ca = a.groupBy(identity).map { case (c, s) => c -> s.length }
+      val m = b.groupBy(identity).map { case (c, s) => math.min(s.length, ca.getOrElse(c, 0)) }.sum
+      2.0 * m / (a.length + b.length)
+    }
+    // 3 vs 10 chars: only the length bound is needed
+    assert(lenBound("abc", "abcdefghij") < 0.9)
+    assert(!Similarity.atLeast("abc", "abcdefghij", 0.9))
+    // equal lengths, one shared char: the length bound passes, the
+    // multiset bound rejects
+    assert(lenBound("abcd", "wxyd") == 1.0 && setBound("abcd", "wxyd") < 0.5)
+    assert(!Similarity.atLeast("abcd", "wxyd", 0.5))
+    // a transposition passes both bounds; only the exact ratio rejects
+    assert(setBound("abcdef", "defabc") == 1.0)
+    assert(!Similarity.atLeast("abcdef", "defabc", 0.9))
+    assert(Similarity.atLeast("abcdef", "defabc", 0.5)) // ratio 0.5, the tie
+  }
+}
+
+object SimilaritySpec {
+  import org.scalatest.Assertions._
+
+  /** `atLeast(a, b, t) == (ratio(a, b) >= t)` at 0, 0.5, 0.9 and 1, at the
+    * golden ratio, and at the computed ratio and the next double above it
+    * (the `>=` tie from both sides). */
+  def agrees(a: String, b: String, golden: Double): Unit = {
+    val r = Similarity.ratio(a, b)
+    for (t <- Seq(0.0, 0.5, 0.9, 1.0, golden, r, Math.nextUp(r)))
+      assert(Similarity.atLeast(a, b, t) == (r >= t),
+        s"atLeast('$a','$b',$t) with ratio $r")
+  }
 }

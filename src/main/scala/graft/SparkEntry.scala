@@ -2553,16 +2553,7 @@ object SparkEntry {
       // retrieval evaluation: MRR@10 of the BM25 ranking against a
       // deterministic ground truth (relevant = docs containing EVERY
       // query term) — the tuning-loop scoreboard for k1/b/analyzers
-      val docs = t(s, dir, "documents")
-      val idx = Retrieval.docTerms(docs, "doc_id", "text").persist()
-      val q = retrievalQueries(s)
-      val qTerms = q.select(col("qid"),
-        explode(array_distinct(split(trim(col("qtext")), "\\s+"))).as("term"))
-      val qn = qTerms.groupBy("qid").agg(count(lit(1)).as("nt"))
-      val relevant = idx.join(qTerms, Seq("term"))
-        .groupBy("qid", "doc_id").agg(count(lit(1)).as("__hit"))
-        .join(qn, Seq("qid")).filter(col("__hit") === col("nt"))
-        .select("qid", "doc_id")
+      val (idx, q, relevant) = retrievalGroundTruth(s, dir)
       Retrieval.mrrAtK(
         Retrieval.bm25TopKIndexed(idx, q, "qid", "qtext", k = 10),
         relevant, k = 10, queries = q)
@@ -2623,16 +2614,7 @@ object SparkEntry {
     "rag_eval_ndcg" -> { (s, dir) =>
       // position-discounted retrieval evaluation: NDCG@10 of the BM25
       // ranking against the same all-terms ground truth as rag_eval_mrr
-      val docs = t(s, dir, "documents")
-      val idx = Retrieval.docTerms(docs, "doc_id", "text").persist()
-      val q = retrievalQueries(s)
-      val qTerms = q.select(col("qid"),
-        explode(array_distinct(split(trim(col("qtext")), "\\s+"))).as("term"))
-      val qn = qTerms.groupBy("qid").agg(count(lit(1)).as("nt"))
-      val relevant = idx.join(qTerms, Seq("term"))
-        .groupBy("qid", "doc_id").agg(count(lit(1)).as("__hit"))
-        .join(qn, Seq("qid")).filter(col("__hit") === col("nt"))
-        .select("qid", "doc_id")
+      val (idx, q, relevant) = retrievalGroundTruth(s, dir)
       Retrieval.ndcgAtK(
         Retrieval.bm25TopKIndexed(idx, q, "qid", "qtext", k = 10),
         relevant, k = 10, queries = q)

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,68 +11,49 @@ import graft.sources.{Sources, Sinks}
   * transform to the RAG output schema → JSONL sink, with per-source
   * object counts (A2) as a side output.
   *
-  * The reference's per-file loop (combine_json_to_jsonl.py:154-289)
-  * becomes a single declarative scan: file parallelism is the FileScan's
+  * The reference's per-directory, per-file loop
+  * (combine_json_to_jsonl.py:154-289, 327-359) becomes one multi-path
+  * scan ([[Sources.jsonRecords]]): file parallelism is the FileScan's
   * partitioning, the source label is derived from the file path column
   * (P11, :188-218) instead of directory-walking state.
   */
 object JsonlPublish {
 
-  /** P4/P5/P6 + F2–F4 content normalization into the RAG contract.
-    * Input schemas differ per pipeline (FDA: Corpus/Webpage/Date…,
-    * PDF: content/url/date…) — absent columns resolve to null, mirroring
-    * the reference's dict.get fallbacks (combine_json_to_jsonl.py:82-104). */
+  /** P4/P5/P6 + F2–F4 content normalization into the RAG contract, over
+    * [[Sources.jsonRecords]]' `record`/`src_file` rows. The dialects
+    * differ per pipeline (FDA: Corpus/Webpage/Date…, PDF:
+    * content/url/date…); a field is looked up case-sensitively, and an
+    * absent one resolves to null, mirroring the reference's dict.get
+    * fallbacks (combine_json_to_jsonl.py:82-104). A record with no content
+    * publishes itself as JSON (F18): its own keys, sorted, with their
+    * JSON types and explicit nulls. */
   def toRagRecords(raw: DataFrame, runDate: String): DataFrame = {
-    def opt(name: String) =
-      if (raw.columns.contains(name)) col(name) else lit(null).cast("string")
-    val content0 = coalesce(opt("Corpus"), opt("content"), lit(""))
+    def field(name: String) = variant_get(col("record"), "$." + name, "string")
+    val content0 = coalesce(field("Corpus"), field("content"), lit(""))
     val cleaned = TextOps.unescapeNewlines(
       TextOps.stripMarkdownImages(TextOps.stripMarkerWrapper(content0)))
     raw.select(
-      TextOps.defaultNonEmpty(cleaned,
-        TextOps.recordToJsonString(col("*"))).as("content"),
+      TextOps.defaultNonEmpty(cleaned, to_json(col("record"))).as("content"),
       when(lower(col("src_file")).contains("fda"), lit("fda_oncology"))
         .otherwise(regexp_extract(col("src_file"), "/([^/]+)/[^/]*$", 1))
         .as("source"),
-      coalesce(opt("Webpage"), opt("url"), lit("")).as("url"),
-      TextOps.defaultNonEmpty(coalesce(opt("Date"), opt("date"), lit("")), lit(runDate)).as("date"),
+      coalesce(field("Webpage"), field("url"), lit("")).as("url"),
+      TextOps.defaultNonEmpty(coalesce(field("Date"), field("date"), lit("")), lit(runDate)).as("date"),
       lit("1.0").as("version"),
-      coalesce(opt("Title"), opt("title"), lit("")).as("title"),
-      coalesce(opt("Description"), opt("description"), lit("")).as("description"),
-      coalesce(opt("RAG_ID"), opt("rag_id"), md5(cleaned)).as("rag_id"))
+      coalesce(field("Title"), field("title"), lit("")).as("title"),
+      coalesce(field("Description"), field("description"), lit("")).as("description"),
+      coalesce(field("RAG_ID"), field("rag_id"), md5(cleaned)).as("rag_id"))
   }
 
-  /** Full lifecycle: dirs → RAG JSONL + per-source stats (A2/A3).
-    * Directories are read separately (each pipeline dialect has its own
-    * JSON schema — `Title` vs `title` would collide in one case-
-    * insensitive union scan) and unioned AFTER normalization, mirroring
-    * the reference's per-directory processing loop
-    * (combine_json_to_jsonl.py:327-359). A directory with no JSON file
-    * is skipped (a quiet day's listing); with none left, the sink gets an
-    * empty JSONL set and the stats are empty. */
+  /** Full lifecycle: dirs → RAG JSONL + per-source stats (A2/A3). Every
+    * dir is read in the one scan and the write is its one job; a dir with
+    * no JSON file (a quiet day's listing) adds no rows, and with none at
+    * all the sink gets an empty JSONL set and the stats are empty. */
   def run(spark: SparkSession, inputDirs: Seq[String], outPath: String,
       runDate: String): DataFrame = {
-    val records = inputDirs.filter(holdsJson(spark, _))
-      .map(d => toRagRecords(Sources.jsonDirRecursive(spark, d), runDate))
-      .reduceOption(_ unionByName _)
-      .getOrElse(toRagRecords(spark.emptyDataFrame
-        .withColumn("src_file", lit(null).cast("string")), runDate))
+    val records = toRagRecords(Sources.jsonRecords(spark, inputDirs), runDate)
     Sinks.writeJsonl(records, outPath)
     records.groupBy(col("source"))
       .agg(count(lit(1)).as("n_objects"))
-  }
-
-  /** Whether `dir` holds a non-empty `*.json` file at any depth — without
-    * one the JSON scan cannot infer a schema. A file listing, no read. */
-  private def holdsJson(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val files = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .listFiles(p, true)
-    var found = false
-    while (!found && files.hasNext) {
-      val f = files.next()
-      found = f.getLen > 0 && f.getPath.getName.endsWith(".json")
-    }
-    found
   }
 }

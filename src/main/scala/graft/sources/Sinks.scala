@@ -14,15 +14,12 @@ import org.apache.spark.sql.functions._
 object Sinks {
 
   /** S9 — JSONL: Spark's JSON writer is line-delimited JSON already
-    * (reference: per-line json.dumps, combine_json_to_jsonl.py:240-263). */
+    * (reference: per-line json.dumps, combine_json_to_jsonl.py:240-263).
+    * Also S6: the reference's "records orient" JSON array file is the same
+    * data as JSONL at the pandas edge (fda_watcher.py:544). */
   def writeJsonl(df: DataFrame, path: String, singleFile: Boolean = false): Unit =
     (if (singleFile) df.coalesce(1) else df)
       .write.mode("overwrite").json(path)
-
-  /** S6 — "records orient" JSON array file is the same data as JSONL at
-    * the pandas edge (fda_watcher.py:544); engine keeps JSONL. */
-  def writeJsonRecords(df: DataFrame, path: String): Unit =
-    writeJsonl(df, path)
 
   /** S8 — one directory per record key (reference: `{RAG_ID}.json`,
     * json_split_and_clean.py:316-320). `partitionBy` gives

@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import graft.pipeline.{FdaPipeline, PdfPipeline, JsonlPublish}
 import graft.sources.{Sources, Sinks}
@@ -186,6 +188,99 @@ class PipelinesSpec extends AnyFunSuite {
     assert(lines.size == 1 && lines.head.contains("\"content\":\"body\""))
   }
 
+  test("JSONL publish in one schema-free read: mixed dialects in one dir, " +
+      "malformed files, the empty-content fallback, a missing dir") {
+    val in = tmp()
+    def put(rel: String, text: String): Unit = {
+      val p = java.nio.file.Path.of(in, rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, text)
+    }
+    // an FDA array file beside a PDF object file: one inferred schema
+    // would hold both `Title` and `title`
+    put("mixed/records.json",
+      """[{"RAG_ID":"r1","Title":"T1","Corpus":"body one","Webpage":"https://x/1"},
+        |{"RAG_ID":"r3","Title":"Empty","Corpus":"","Date":null,"N":2,"Tags":["a"]}]""".stripMargin)
+    put("mixed/page.json", """{"title":"T2","content":"body two","url":"https://x/2"}""")
+    put("bad/ok.json", """{"title":"T4","content":"body four"}""")
+    put("bad/obj.json", """{"title": "x",""")
+    put("bad/arr.json", """[{"title": "y"},""")
+
+    val out = tmp() + "/out"
+    val stats = JsonlPublish.run(spark, Seq(s"$in/mixed", s"$in/bad"), out,
+      runDate = "2026-01-01").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(stats == Map("mixed" -> 3L, "bad" -> 3L))
+    val lines = new java.io.File(out).listFiles().filter(_.getName.endsWith(".json")).toSeq
+      .flatMap(f => Files.readAllLines(f.toPath).toArray.map(_.toString))
+    import org.json4s._
+    val byTitle = lines.map(l => org.json4s.jackson.JsonMethods.parse(l)
+      .asInstanceOf[JObject].obj.collect { case (k, JString(v)) => k -> v }.toMap)
+      .groupBy(_("title"))
+    assert(byTitle("T1").head("content") == "body one")
+    assert(byTitle("T1").head("url") == "https://x/1")
+    assert(byTitle("T2").head("content") == "body two")
+    assert(byTitle("T2").head("url") == "https://x/2")
+    assert(byTitle("T4").head("source") == "bad")
+
+    // an unparseable file publishes one line: Spark's PERMISSIVE record
+    val corrupt = byTitle("").map(_("content")).toSet
+    assert(corrupt == Set(
+      raw"""{"_corrupt_record":"{\"title\": \"x\",","src_file":"file://$in/bad/obj.json"}""",
+      raw"""{"_corrupt_record":"[{\"title\": \"y\"},","src_file":"file://$in/bad/arr.json"}"""))
+    assert(byTitle("").forall(r => r("source") == "bad" && r("url") == "" &&
+      r("date") == "2026-01-01" && r("rag_id") == "d41d8cd98f00b204e9800998ecf8427e"))
+
+    // an empty-content record publishes its own sorted keys, JSON types
+    // and explicit nulls, and no engine path
+    assert(lines.contains(
+      """{"content":"{\"Corpus\":\"\",\"Date\":null,\"N\":2,\"RAG_ID\":\"r3\",""" +
+      """\"Tags\":[\"a\"],\"Title\":\"Empty\"}","source":"mixed","url":"",""" +
+      """"date":"2026-01-01","version":"1.0","title":"Empty","description":"","rag_id":"r3"}"""))
+
+    intercept[Exception] {
+      JsonlPublish.run(spark, Seq(s"$in/mixed", s"$in/missing"), tmp() + "/out",
+        runDate = "2026-01-01")
+    }
+  }
+
+  test("JSONL publish runs one Spark job, the write, whatever the dirs") {
+    val in = tmp()
+    for ((d, f, text) <- Seq(
+        ("a", "x.json", """[{"Title":"A","Corpus":"body a"}]"""),
+        ("b", "y.json", """{"title":"B","content":"body b"}"""),
+        ("c", "notes.txt", "no json here"))) {
+      new java.io.File(s"$in/$d").mkdirs()
+      Files.writeString(java.nio.file.Path.of(s"$in/$d/$f"), text)
+    }
+    // jobs are tagged by a thread-local property; a marker job after the
+    // publish arrives after all of its jobs (listener delivery is ordered)
+    val tags = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("publish.spec.tag")))
+          .foreach(tags.put)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("publish.spec.tag", "publish")
+      // the per-source stats are left uncollected: the publish is the write
+      JsonlPublish.run(spark, Seq("a", "b", "c").map(d => s"$in/$d"), tmp() + "/out",
+        runDate = "2026-01-01")
+      sc.setLocalProperty("publish.spec.tag", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      def next() = tags.poll(30, TimeUnit.SECONDS)
+      var jobs = 0
+      var tag = next()
+      while (tag == "publish") { jobs += 1; tag = next() }
+      assert(tag == "marker", "the marker job never reached the listener")
+      assert(jobs == 1, s"the publish started $jobs jobs")
+    } finally {
+      sc.setLocalProperty("publish.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("quarantine split routes rows to ok/failed sinks") {
     val df = Seq((1, true), (2, false), (3, true)).toDF("id", "ok")
     val base = tmp()
@@ -201,7 +296,7 @@ class PipelinesSpec extends AnyFunSuite {
     new java.io.File(s"$in/sub").mkdirs()
     Files.writeString(java.nio.file.Path.of(s"$in/z.json"), """{"v":1}""")
     Files.writeString(java.nio.file.Path.of(s"$in/sub/a.json"), """{"v":2}""")
-    val df = Sources.jsonDirRecursive(spark, in)
+    val df = Sources.jsonRecords(spark, Seq(in))
     assert(df.count() == 2)
     val files = df.select("src_file").as[String].collect()
     assert(files.forall(_.endsWith(".json")))

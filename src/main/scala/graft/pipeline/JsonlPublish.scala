@@ -26,7 +26,8 @@ object JsonlPublish {
     * absent one resolves to null, mirroring the reference's dict.get
     * fallbacks (combine_json_to_jsonl.py:82-104). A record with no content
     * publishes itself as JSON (F18): its own keys, sorted, with their
-    * JSON types and explicit nulls. */
+    * JSON types and explicit nulls. A dir on the path, never the file
+    * name, holding "fda" labels the record `fda_oncology`. */
   def toRagRecords(raw: DataFrame, runDate: String): DataFrame = {
     def field(name: String) = variant_get(col("record"), "$." + name, "string")
     val content0 = coalesce(field("Corpus"), field("content"), lit(""))
@@ -34,7 +35,7 @@ object JsonlPublish {
       TextOps.stripMarkdownImages(TextOps.stripMarkerWrapper(content0)))
     raw.select(
       TextOps.defaultNonEmpty(cleaned, to_json(col("record"))).as("content"),
-      when(lower(col("src_file")).contains("fda"), lit("fda_oncology"))
+      when(lower(col("src_file")).rlike("fda[^/]*/"), lit("fda_oncology"))
         .otherwise(regexp_extract(col("src_file"), "/([^/]+)/[^/]*$", 1))
         .as("source"),
       coalesce(field("Webpage"), field("url"), lit("")).as("url"),

@@ -52,27 +52,28 @@ object PdfPipeline {
   def convertAndExtract(binaries: DataFrame, converter: Converter): DataFrame = {
     val spark = binaries.sparkSession
     import spark.implicits._
-    val converted = binaries.select(col("path"), col("content"))
+    binaries.select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
         // one converter handle per partition (session-reuse pattern,
         // fda_watcher.py:365 / pdf_marker_extraction.py:104-127)
         it.map { case (p, bytes) => (p, converter.convert(p, bytes)) }
       }.toDF("path", "text")
-    converted
       .withColumn("title",
         nullif(trim(regexp_extract(col("text"), "(?m)^#\\s+(.+)$", 1)), lit("")))
       .withColumn("doi", gf.extract_doi(col("text")))
   }
 
   /** Phase 2: enrichment against a PubMed dimension + verification.
-    * Two-step lookup mirroring _search_pubmed (DOI first, then title):
-    * both become broadcast joins; the title path carries the exact
-    * Ratcliff/Obershelp >= 0.90 gate. The title path is a nested-loop
-    * theta-join (J3), so its cost is per pair: both titles are normalized
-    * once per row before the join, and the condition is
-    * `similarity_at_least`, which rejects a pair on difflib's length or
-    * character-multiset upper bound before it runs the Ratcliff search.
+    * Two-step lookup mirroring _search_pubmed (DOI first, then title) as
+    * one chain of broadcast left joins, so a batch is read once. The title
+    * join, only where the DOI join found no row (:397-409), carries the
+    * exact Ratcliff/Obershelp >= 0.90 gate against a `t_` copy of the
+    * dimension; a document keeps every DOI-matched row, else its
+    * lowest-pmid title match. That join is a nested-loop theta-join (J3),
+    * so its cost is per pair: both titles are normalized once per row
+    * before it, and `similarity_at_least` rejects a pair on difflib's
+    * length or character-multiset upper bound before the Ratcliff search.
     * Both bounds are exact (see [[graft.ops.Similarity.atLeast]]), so the
     * matched pairs are those of `similarity(...) >= 0.90`. */
   def enrich(docs: DataFrame, pubmedDim: DataFrame): DataFrame = {
@@ -80,42 +81,31 @@ object PdfPipeline {
       TextOps.normalizeDoi(col("doi")).as("dim_doi_norm"),
       col("doi").as("dim_doi"), col("title").as("dim_title"),
       col("journal"), col("year"), col("authors"), col("pmid"))
-
-    val withDoiMatch = docs
+    val titleDim = dim.select(dim.columns.toIndexedSeq.map(c => col(c).as(s"t_$c")) :+
+      TextOps.normalizeForCompare(col("dim_title")).as("t_cmp"): _*)
+    val doiHit = col("dim_doi_norm").isNotNull
+    val matched = docs
       .withColumn("doi_norm", TextOps.normalizeDoi(col("doi")))
       .join(broadcast(dim), col("doi_norm") === col("dim_doi_norm"), "left_outer")
-
-    // title path only where the DOI path failed (reference order, :397-409)
-    // each side's title is normalized once, not once per pair
-    val needTitle = withDoiMatch.filter(col("dim_doi_norm").isNull)
-      .drop(dim.columns.toIndexedSeq: _*)
       .withColumn("title_cmp", TextOps.normalizeForCompare(col("title")))
-    val titleDim = broadcast(dim.withColumnRenamed("dim_doi_norm", "t_doi_norm")
-      .withColumn("dim_title_cmp", TextOps.normalizeForCompare(col("dim_title"))))
-    val titleMatched = needTitle.join(titleDim,
-        gf.similarity_at_least(col("title_cmp"), col("dim_title_cmp"), 0.90),
-        "left_outer")
-      .drop("title_cmp", "dim_title_cmp")
+      .join(broadcast(titleDim), !doiHit &&
+        gf.similarity_at_least(col("title_cmp"), col("t_cmp"), 0.90), "left_outer")
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("path"))
-          .orderBy(col("pmid").asc_nulls_last)))
-      .filter(col("rk") === 1).drop("rk")
-      .withColumnRenamed("t_doi_norm", "dim_doi_norm")
+          .orderBy(col("t_pmid").asc_nulls_last)))
+      .filter(doiHit || col("rk") === 1)
 
-    val doiMatched = withDoiMatch.filter(col("dim_doi_norm").isNotNull)
-      .withColumn("verified", lit(true)).withColumn("use_doi", lit(true))
     // DOI-conflict veto (pubmed_enrichment.py:277-284): when BOTH the local
     // and the matched PubMed DOI exist, verify() compares them and returns
     // unverified on mismatch — title similarity is only consulted when one
     // side lacks a DOI. Equal pairs already matched on the DOI path above,
     // so both-present on the title path is necessarily a conflict.
-    val titleVerified = titleMatched
-      .withColumn("verified", col("pmid").isNotNull &&
-        (col("doi_norm").isNull || col("dim_doi_norm").isNull ||
-          col("doi_norm") === col("dim_doi_norm")))
-      .withColumn("use_doi", lit(false))
-
-    doiMatched.unionByName(titleVerified.select(doiMatched.columns.toIndexedSeq.map(col): _*))
+    val verified = doiHit || (col("t_pmid").isNotNull &&
+      (col("doi_norm").isNull || col("t_dim_doi_norm").isNull ||
+        col("doi_norm") === col("t_dim_doi_norm")))
+    matched.select((docs.columns.toIndexedSeq :+ "doi_norm").map(col) ++
+      dim.columns.map(c => when(doiHit, col(c)).otherwise(col(s"t_$c")).as(c)) ++
+      Seq(verified.as("verified"), doiHit.as("use_doi")): _*)
   }
 
   /** Phase 3: build the EnrichedDocument projection

@@ -1,13 +1,14 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ops.ScaleHints
 import graft.pipeline.FdaPipeline
+import graft.sources.Xlsx
 
 /** The reference's daemon scheduler as a Structured Streaming driver
   * (fda_rag_extraction/scripts/scheduler.py:116-123: schedule.every().day
@@ -87,10 +88,11 @@ object ScheduledIngest {
       else if (complete(fs, dir.suffix(".old"))) rename(fs, dir.suffix(".old"), dir)
     }
 
+  /** The committed master, read with [[masterSchema]]: no inference job. */
   private def loadMaster(spark: SparkSession, masterDir: String): DataFrame = {
     val (fs, p) = fsFor(spark, masterDir)
     recoverMaster(fs, p)
-    if (complete(fs, p)) spark.read.parquet(masterDir)
+    if (complete(fs, p)) spark.read.schema(masterSchema).parquet(masterDir)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], masterSchema)
   }
@@ -102,11 +104,19 @@ object ScheduledIngest {
     * the new master, never a half-written one. On S3-like stores the
     * production form is a metastore / table-format pointer flip. */
   private def swapMaster(updated: DataFrame, masterDir: String): Long = {
-    updated.write.mode("overwrite").parquet(s"$masterDir.next")
-    val n = updated.sparkSession.read.parquet(s"$masterDir.next").count()
+    val n = overwrite(updated, "parquet", s"$masterDir.next")
     val (fs, dir) = fsFor(updated.sparkSession, masterDir)
     swapDirs(fs, dir)
     n
+  }
+
+  /** Overwrites `path` with `df`; returns the rows written, observed by the
+    * write job. Only the stream's session observes: an `Observation` leaves
+    * it unserializable, which fails a task that ships it (an ML summary). */
+  private def overwrite(df: DataFrame, format: String, path: String): Long = {
+    val n = Observation()
+    df.observe(n, count(lit(1)).as("n")).write.mode("overwrite").format(format).save(path)
+    n.get("n").asInstanceOf[Long]
   }
 
   private[graft] def swapDirs(fs: FileSystem, dir: Path): Unit = {
@@ -145,15 +155,18 @@ object ScheduledIngest {
 
   /** One tick of the ingest lifecycle over a batch of fresh records
     * ([[freshSchema]]), shared by [[start]] and [[startHtml]]. Every
-    * write and count reads one eager cut of the cleaned delta, so
-    * clean_corpus runs once per delta record. A cut, not persist: AQE
-    * coalesces a cut's output partitions but never a cached plan's, so
-    * a persisted delta would write a part file per shuffle partition. */
+    * write reads one eager cut of the cleaned delta, so clean_corpus
+    * runs once per delta record. A cut, not persist: AQE coalesces a
+    * cut's output partitions but never a cached plan's, so a persisted
+    * delta would write a part file per shuffle partition. The counts are
+    * observed by the cut (`nFresh`) and the three writes: no extra job. */
   private def runTick(spark: SparkSession, batch: DataFrame, batchId: Long,
       masterDir: String, publishDir: String, quarantineDir: String,
       runDateOf: Long => String, source: String,
       masterXlsxPath: Option[String], onTick: Tick => Unit): Unit = {
-    val res = FdaPipeline.run(batch, loadMaster(spark, masterDir), runDateOf(batchId), source)
+    val nFresh = Observation()
+    val res = FdaPipeline.run(batch.observe(nFresh, count(lit(1)).as("n")),
+      loadMaster(spark, masterDir), runDateOf(batchId), source)
     val delta = ScaleHints.cut(res.delta, ScaleHints.reliableConfigured(res.delta))
     val out = res.copy(delta = delta)
     try {
@@ -161,13 +174,11 @@ object ScheduledIngest {
       // after a partial tick must not duplicate records — re-running
       // batch N rewrites batch=N in place, so publish is idempotent
       // like the quarantine split. Readers see one partitioned tree.
-      out.published.write.mode("overwrite").json(s"$publishDir/batch=$batchId")
-      out.quarantined.write.mode("overwrite").json(s"$quarantineDir/batch=$batchId")
-      val (np, nq) = (out.published.count(), out.quarantined.count())
+      val np = overwrite(out.published, "json", s"$publishDir/batch=$batchId")
+      val nq = overwrite(out.quarantined, "json", s"$quarantineDir/batch=$batchId")
       val nm = swapMaster(out.updatedMaster, masterDir)
-      masterXlsxPath.foreach(x =>
-        graft.sources.Xlsx.writeMaster(spark.read.parquet(masterDir), x))
-      onTick(Tick(batchId, batch.count(), np, nq, nm))
+      masterXlsxPath.foreach(x => Xlsx.writeMaster(loadMaster(spark, masterDir), x))
+      onTick(Tick(batchId, nFresh.get("n").asInstanceOf[Long], np, nq, nm))
     } finally ScaleHints.releaseCheckpoint(delta)
   }
 
@@ -213,12 +224,9 @@ object ScheduledIngest {
       onTick: Tick => Unit = _ => ()): StreamingQuery = {
     // discovery stream: a file source tracks which page files are new
     // (checkpointed file index); the tick re-reads those files through
-    // the DSv2 source, which owns parsing + pushdown. binaryFile with a
-    // path-only projection, NOT a wholetext text source: the text
-    // source materialized every page's full contents just to extract
-    // input_file_name, so each page's bytes were read twice per tick
-    // (round-9 advice) — binaryFile prunes `content` when only `path`
-    // is selected, making discovery a pure listing pass
+    // the DSv2 source, which owns parsing + pushdown. binaryFile prunes
+    // `content` when only `path` is selected, so discovery is a pure
+    // listing pass (a wholetext source would read each page twice a tick)
     val watcher = spark.readStream
       .format("binaryFile")
       // streaming file sources demand an explicit schema; this is
@@ -234,19 +242,18 @@ object ScheduledIngest {
         val newPages = files.select("file").distinct()
           .collect().map(_.getString(0)).sorted
         if (newPages.nonEmpty) {
-          val listing = spark.read.format("graft-html")
+          // read on the micro-batch's session: the tick observes it (see [[overwrite]])
+          val listing = files.sparkSession.read.format("graft-html")
             .option("baseDomain", baseDomain)
             .load(newPages.toIndexedSeq: _*)
             .filter(col("n_cells") >= minCells)
-          // Both sides dedupe DETERMINISTICALLY before the join — the
-          // detail dir is append-only (a url re-fetched across days has
-          // several rows; keep the longest text, the retry-on-improve
-          // winner) and one trigger window can land two listing pages
-          // both carrying a row (same fingerprint key (url, title,
-          // date); keep the max description). Without this the join
-          // fans out and a single tick would publish duplicate rag_ids
-          // into the master.
-          val detail = spark.read.schema(detailSchema).json(detailTextDir)
+          // Both sides dedupe deterministically before the join: the detail
+          // dir is append-only (a url re-fetched across days keeps several
+          // rows; keep the longest text, the retry-on-improve winner), and
+          // one trigger window can land two pages carrying the same row
+          // (same (url, title, date); keep the max description). Otherwise
+          // the join fans out into duplicate rag_ids in the master.
+          val detail = files.sparkSession.read.schema(detailSchema).json(detailTextDir)
             .filter(col("text").isNotNull)
             .groupBy("url")
             .agg(max(struct(length(col("text")).as("l"), col("text")))

@@ -138,6 +138,46 @@ class PipelinesSpec extends AnyFunSuite {
       "Document. Zorbatinib Effixazy. (Unverified)")
   }
 
+  test("PDF lifecycle: one scan and one conversion per file; a duplicated " +
+      "DOI keeps both rows, a title tie the lowest pmid") {
+    val in = tmp()
+    val files = Seq(
+      "a.pdf" -> "# Dup Doi Paper\n\nBody doi: 10.5555/dup.001 rest.",
+      "b.pdf" -> "# Twin Title\n\nNo doi present here.",
+      "c.pdf" -> "# Nothing Here At All\n\nNo doi either.",
+      "d.pdf" -> "# Single Doi Paper\n\nBody doi: 10.5555/one.002 rest.")
+    for ((f, text) <- files) Files.writeString(java.nio.file.Path.of(in, f), text)
+    val dim = Seq(
+      ("10.5555/dup.001", "Dup Doi Paper", "J Dup", "2019", Seq("Ann, A"), "501"),
+      ("10.5555/DUP.001", "Dup Doi Paper Again", "J Dup", "2019", Seq("Ann, A"), "502"),
+      (null, "Twin Title", "J Twin", "2018", Seq("Bo, B"), "602"),
+      (null, "Twin Title", "J Twin", "2018", Seq("Bo, B"), "601"),
+      ("10.5555/one.002", "Single Doi Paper", "J One", "2017", Seq("Cy, C"), "701")
+    ).toDF("doi", "title", "journal", "year", "authors", "pmid")
+
+    val calls = spark.sparkContext.longAccumulator("converter.calls")
+    val df = PdfPipeline.run(Sources.binaryFiles(spark, in), dim, new PipelinesSpec.CountingConverter(calls))
+    val rows = df.collect()
+    assert(calls.value == files.size)
+    val binaryScans = Plans.nodes(df.queryExecution.executedPlan).count {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.fileFormat.isInstanceOf[
+          org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat]
+      case _ => false
+    }
+    assert(binaryScans == 1, df.queryExecution.executedPlan)
+
+    val links = rows.groupBy(_.getAs[String]("path").split("/").last)
+      .map { case (f, rs) => f -> rs.map(_.getAs[String]("Link")).sorted.toSeq }
+    // both dimension rows of the duplicated DOI stay, as the DOI path keeps them
+    assert(links("a.pdf") ==
+      Seq("https://doi.org/10.5555/DUP.001", "https://doi.org/10.5555/dup.001"))
+    assert(links("b.pdf") == Seq("https://pubmed.ncbi.nlm.nih.gov/601"))
+    assert(links("c.pdf") == Seq("https://pubmed.ncbi.nlm.nih.gov"))
+    assert(links("d.pdf") == Seq("https://doi.org/10.5555/one.002"))
+    assert(rows.length == 5)
+  }
+
   test("JSONL publish lifecycle over a real directory tree") {
     val in = tmp()
     val fdaDir = new java.io.File(s"$in/fda_set"); fdaDir.mkdirs()
@@ -160,6 +200,26 @@ class PipelinesSpec extends AnyFunSuite {
     val fda = written.filter(col("rag_id") === "r1").collect()(0)
     assert(fda.getAs[String]("content") == "Hello  world\nnext")
     assert(fda.getAs[String]("date") == "2024-01-01")
+  }
+
+  test("JSONL publish labels a record fda_oncology by its directories, " +
+      "never by its file name") {
+    val in = tmp()
+    def put(rel: String): Unit = {
+      val p = java.nio.file.Path.of(in, rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, s"""{"content":"body of $rel","title":"$rel"}""")
+    }
+    // a writer's part file holds a random UUID, which may spell "fda"
+    put("plain/part-00000-1fda2e3b.c000.json")
+    put("fda_set/record=abc/part-00000-0123.c000.json")
+    val out = tmp() + "/out"
+    JsonlPublish.run(spark, Seq(s"$in/plain", s"$in/fda_set"), out, runDate = "2026-01-01")
+    val labels = spark.read.json(out).select("title", "source").as[(String, String)]
+      .collect().toMap
+    assert(labels == Map(
+      "plain/part-00000-1fda2e3b.c000.json" -> "plain",
+      "fda_set/record=abc/part-00000-0123.c000.json" -> "fda_oncology"))
   }
 
   test("JSONL publish on a quiet day: JSON-less or no input dirs publish " +
@@ -300,5 +360,17 @@ class PipelinesSpec extends AnyFunSuite {
     assert(df.count() == 2)
     val files = df.select("src_file").as[String].collect()
     assert(files.forall(_.endsWith(".json")))
+  }
+}
+
+object PipelinesSpec {
+  /** A converter that counts its calls, to show how often a batch is
+    * converted. */
+  class CountingConverter(calls: org.apache.spark.util.LongAccumulator)
+      extends PdfPipeline.Converter {
+    def convert(path: String, content: Array[Byte]): String = {
+      calls.add(1)
+      PdfPipeline.TextBytesConverter.convert(path, content)
+    }
   }
 }

@@ -7,10 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -21,13 +23,20 @@ import graft.streaming.ScheduledIngest
   * Streaming): two trigger ticks over a landing directory must show
   * delta-only processing — a re-scraped record is a no-op on tick 2 —
   * and the manual-review quarantine split (S10). */
-class ScheduledIngestSpec extends AnyFunSuite {
+class ScheduledIngestSpec extends AnyFunSuite with TimeLimits {
   lazy val spark = TestSpark.spark
 
   private def rec(url: String, title: String, text: String): String =
     s"""{"url":"$url","title":"$title","description":"d","date":"01/15/2024","text":"$text"}"""
 
   private val longText = ("fda approves new therapy for treatment of patients " * 4).trim
+
+  /** A tick's `Observation`s must live on the stream's own session: one
+    * leaves its session unserializable, which fails any later task that
+    * ships the caller's session (a fitted LogisticRegressionModel's
+    * training summary holds it). */
+  private def assertCallerSessionShippable(): Unit =
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
 
   test("two ticks: delta-only processing + quarantine split") {
     val root = Files.createTempDirectory("graft_sched")
@@ -190,19 +199,14 @@ class ScheduledIngestSpec extends AnyFunSuite {
       val xl = graft.sources.Xlsx.readMaster(spark, xlsxPath)
       assert(xl.select("title").as[String](org.apache.spark.sql.Encoders.STRING)
         .collect().toSet == Set("Drug A", "Drug C"))
+      assertCallerSessionShippable()
     } finally {
       q.stop()
       scala.reflect.io.Directory(root.toFile).deleteRecursively()
     }
   }
 
-  /** Every physical node of an executed plan, through AQE stages and
-    * cached relations. */
-  private def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case s: QueryStageExec => Seq(s.plan)
-    case _ => p.children.map(_.asInstanceOf[QueryPlan[_]]) ++ p.innerChildren
-  }).flatMap(nodes)
+  import Plans.nodes
 
   private def cleans(p: QueryPlan[_]): Boolean =
     p.expressions.exists(_.exists(_.isInstanceOf[graft.expr.CleanCorpusExpr]))
@@ -322,6 +326,104 @@ class ScheduledIngestSpec extends AnyFunSuite {
       // an accepting FS recovers it
       ScheduledIngest.recoverMaster(fs, master)
       assert(fs.exists(new HPath(master, "_SUCCESS")) && !fs.exists(next))
+    } finally scala.reflect.io.Directory(root.toFile).deleteRecursively()
+  }
+
+  /** One landing dir, master and outputs, driven one `AvailableNow`
+    * trigger at a time over a shared checkpoint: each [[tick]] processes
+    * exactly the files landed since the previous one. */
+  private class Daemon(root: Path) {
+    private def dir(n: String): String = { val p = root.resolve(n); Files.createDirectories(p); p.toString }
+    val incoming: String = dir("incoming")
+    val master = s"$root/master"
+    val publish: String = dir("publish")
+    val quarantine: String = dir("quarantine")
+    private var landed = 0
+
+    def land(records: String*): Unit = {
+      landed += 1
+      Files.writeString(Path.of(incoming, s"scrape$landed.json"), records.mkString("", "\n", "\n"))
+    }
+
+    /** Runs one trigger; an `Observation` whose metric never arrives would
+      * block the tick forever, so the wait is bounded and interrupts. */
+    def tick(): ScheduledIngest.Tick = {
+      val last = new java.util.concurrent.atomic.AtomicReference[ScheduledIngest.Tick]()
+      val q = ScheduledIngest.start(spark, incoming, master, publish, quarantine,
+        s"$root/ckpt", Trigger.AvailableNow(), runDateOf = _ => "2026-01-01",
+        onTick = last.set(_))
+      implicit val signaler: Signaler = ThreadSignaler
+      try failAfter(90.seconds)(q.awaitTermination()) finally q.stop()
+      q.exception.foreach(e => throw e)
+      assert(last.get != null, "the trigger ran no batch")
+      last.get
+    }
+
+    /** What `t` wrote, recounted from its outputs and its landing file. */
+    def recount(t: ScheduledIngest.Tick): ScheduledIngest.Tick = ScheduledIngest.Tick(t.batchId,
+      spark.read.text(Path.of(incoming, s"scrape$landed.json").toString).count(),
+      spark.read.text(s"$publish/batch=${t.batchId}").count(),
+      spark.read.text(s"$quarantine/batch=${t.batchId}").count(),
+      spark.read.parquet(master).count())
+  }
+
+  test("a tick against a non-empty master runs at most 5 jobs, and each Tick " +
+      "count is what the tick wrote") {
+    val root = Files.createTempDirectory("graft_sched_jobs")
+    val d = new Daemon(root)
+    // jobs are tagged by an inherited thread-local property (the stream's
+    // thread is started under the tag); a marker job after the tick
+    // arrives after all of its jobs (listener delivery is ordered)
+    val tags = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("tick.spec.tag")))
+          .foreach(tags.put)
+    }
+    val sc = spark.sparkContext
+    try {
+      d.land(rec("https://x/1", "Drug A", longText), rec("https://x/2", "Drug B", longText))
+      d.tick()
+      d.land(rec("https://x/1", "Drug A", longText), rec("https://x/3", "Drug C", longText),
+        rec("https://x/4", "Drug D", "too short"))
+      sc.addSparkListener(listener)
+      sc.setLocalProperty("tick.spec.tag", "tick")
+      val t = d.tick()
+      sc.setLocalProperty("tick.spec.tag", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      def next() = tags.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      var jobs = 0
+      var tag = next()
+      while (tag == "tick") { jobs += 1; tag = next() }
+      assert(tag == "marker", "the marker job never reached the listener")
+      assert(jobs <= 5, s"the tick started $jobs jobs")
+
+      assert((t.nFresh, t.nPublished, t.nQuarantined, t.nMaster) == (3, 1, 1, 3))
+      assert(d.recount(t) == t)
+      assertCallerSessionShippable()
+    } finally {
+      sc.setLocalProperty("tick.spec.tag", null)
+      sc.removeSparkListener(listener)
+      scala.reflect.io.Directory(root.toFile).deleteRecursively()
+    }
+  }
+
+  test("ticks whose writes are empty still report their zero counts") {
+    val root = Files.createTempDirectory("graft_sched_empty")
+    val d = new Daemon(root)
+    try {
+      // every record too short: nothing published, an empty master written
+      d.land(rec("https://x/1", "Drug A", "too short"), rec("https://x/2", "Drug B", "short"))
+      val t0 = d.tick()
+      assert((t0.nFresh, t0.nPublished, t0.nQuarantined, t0.nMaster) == (2, 0, 2, 0))
+      assert(d.recount(t0) == t0)
+      d.land(rec("https://x/3", "Drug C", longText), rec("https://x/4", "Drug D", longText))
+      d.tick()
+      // every record already in the master: an empty delta
+      d.land(rec("https://x/3", "Drug C", longText), rec("https://x/4", "Drug D", longText))
+      val t2 = d.tick()
+      assert((t2.nFresh, t2.nPublished, t2.nQuarantined, t2.nMaster) == (2, 0, 0, 2))
+      assert(d.recount(t2) == t2)
     } finally scala.reflect.io.Directory(root.toFile).deleteRecursively()
   }
 }

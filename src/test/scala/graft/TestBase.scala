@@ -19,6 +19,19 @@ object TestSpark {
   }
 }
 
+object Plans {
+  import org.apache.spark.sql.catalyst.plans.QueryPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+  /** Every physical node of an executed plan, through AQE stages and
+    * cached relations. */
+  def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _ => p.children.map(_.asInstanceOf[QueryPlan[_]]) ++ p.innerChildren
+  }).flatMap(nodes)
+}
+
 object Goldens {
   /** Load a golden fixture file from src/test/resources/goldens. */
   def load(name: String): List[Map[String, JValue]] = {

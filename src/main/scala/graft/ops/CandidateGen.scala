@@ -242,7 +242,7 @@ object CandidateGen {
     * fires the degrade WITHOUT the full prefix build only when it is
     * `fastGateMargin` past the budget — the ambiguous middle keeps the
     * exact measured decision. Margin 8 vs the measured estimator error
-    * (BoundProbe at sf10: estimate within ~1.3× of the exact bound at
+    * (`Probe bound` at sf10: estimate within ~1.3× of the exact bound at
     * f = 0.02) keeps a corpus genuinely under budget from being
     * degraded by sampling noise. */
   private[graft] val fastGateMargin = 8L
@@ -432,7 +432,7 @@ object CandidateGen {
     * family's absolute would-not-finish budget: past `perRow`
     * candidates per (probe + build) row, the measured bound says the
     * build side has scaled WITH the corpus (candidates quadratic by
-    * construction — BoundProbe measured 121k → 13.8M per 10× on the
+    * construction — `Probe bound` measured 121k → 13.8M per 10× on the
     * bench corpora) and the generator degrades to MinHash-LSH banding.
     * 64/row ≈ 4× looser than the band-only regime's own ceiling
     * (bandOnlyMax 8M ≈ 16/row at sf0.1 scale) — generous to the exact

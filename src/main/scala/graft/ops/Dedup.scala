@@ -200,7 +200,7 @@ object Dedup {
     * since r17 that contract is ENFORCED, not assumed: when the sampled
     * candidate-bound estimate exceeds the linear per-row allowance
     * (build side scaling with the corpus — the quadratic regime
-    * BoundProbe measured at 121k → 13.8M candidates per 10×), the
+    * `graft.Probe bound` measured at 121k → 13.8M candidates per 10×), the
     * generator degrades to cross-side MinHash-LSH banding
     * (bandPrefixAcross scaladoc; `exact = false`, recall = the banding
     * curve, precision still 1 through the verify below). Sides must be
@@ -413,7 +413,7 @@ object Dedup {
     * (64 = 16×4 → ≥0.9998 at s = 0.8). */
   def minHashNearDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleK: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, persistSketches: Boolean = true): DataFrame = {
+      bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // the per-doc sketch table feeds three consumers (banding + both
@@ -421,14 +421,13 @@ object Dedup {
     // once — at corpus scale this IS the materialize-sketches stage.
     // CALLER CONTRACT: the cache cannot be released from inside a lazy
     // plan — after materializing the result, call
-    // `spark.catalog.clearCache()` (what Bench/Verify do) or pass
-    // persistSketches = false to trade the cache for recomputation.
-    val base0 = widenScan(df).select(col(idCol),
+    // `spark.catalog.clearCache()` (what Bench/Verify do).
+    val base = widenScan(df).select(col(idCol),
       hashedShingles(col(textCol), shingleK).as("hs"),
       minhash_signature(col(textCol), shingleK, numHashes).as("sig"))
       .withColumn("n", size(col("hs")))
       .filter(col("n") > 0)
-    val base = if (persistSketches) base0.persist() else base0
+      .persist()
 
     // one (band_idx, band_key) row per band; key = hash of the band's slice
     val banded = base.select(col(idCol),
@@ -589,7 +588,7 @@ object Dedup {
     * LINEAR in n, and recall at the anchor decays by (1 − θ/π) per
     * added plane — the silent-at-scale trade the r11 advisory flagged;
     * choose it when throughput dominates and the operating pairs sit
-    * far above the threshold (measure with [[graft.RecallEval]]).
+    * far above the threshold (measure with `graft.Probe recall`).
     * Recall at the anchor is held ≥ R at every plane count until the
     * maxTables clamp binds — which at the DEFAULTS it never does: the
     * required table count is 37 at effPlanes 17 and 60 at the maxPlanes
@@ -672,7 +671,7 @@ object Dedup {
       val (effPlanes, effTables, clampBinds) = lshEffParams(n, threshold,
         nPlanes, nTables, targetBucketOccupancy, maxPlanes, maxTables,
         scaleTables)
-      // surface BOTH clamp regimes the way BoundProbe surfaces the
+      // surface BOTH clamp regimes the way `Probe bound` surfaces the
       // candidate gates (r12 verdict #6): maxTables binding breaks the
       // recall hold; maxPlanes binding keeps recall but ends the
       // linear-candidates property (occupancy resumes growing)

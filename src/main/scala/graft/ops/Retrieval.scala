@@ -140,14 +140,6 @@ object Retrieval {
       .agg(sum(col("c_micro")).cast("long").as("score_micro"))
   }
 
-  /** Convenience twin of [[bm25ScoresIndexed]] (persists the index it
-    * builds; see [[bm25TopK]] for the cache contract). */
-  def bm25Scores(docs: DataFrame, idCol: String, textCol: String,
-      queries: DataFrame, qidCol: String, qtextCol: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25ScoresIndexed(docTerms(docs, idCol, textCol).persist(),
-      queries, qidCol, qtextCol, k1, b)
-
   /** Reciprocal-rank fusion of N rankings sharing (qid, doc_id, rank)
     * columns: score = Σ_i floor(1e9 / (k + rank_i)), missing docs
     * contribute 0. Pure integer output (the division is exactly rounded,

@@ -20,14 +20,12 @@ object TfIdfEmbed {
 
   /** Fit + transform: returns (idCol, embedding array<float>, norm'd).
     *
-    * `persistTf = true` (default) caches the tokenized sparse TF vectors
-    * so the corpus is tokenized+hashed once, not twice (IDF fit pass +
-    * transform pass). Same cache contract as
-    * [[Dedup.minHashNearDups]]: the cache lives until the caller (or
-    * `spark.catalog.clearCache()`) drops it; pass `persistTf = false`
-    * to trade the cache for recomputation. */
+    * Caches the tokenized sparse TF vectors so the corpus is
+    * tokenized+hashed once, not twice (IDF fit pass + transform pass).
+    * Same cache contract as [[Dedup.minHashNearDups]]: the cache lives
+    * until the caller (or `spark.catalog.clearCache()`) drops it. */
   def embed(df: DataFrame, idCol: String, textCol: String,
-      dim: Int = 256, persistTf: Boolean = true): DataFrame = {
+      dim: Int = 256): DataFrame = {
     val tok = new RegexTokenizer().setInputCol(textCol).setOutputCol("__tokens")
       .setPattern("\\s+")
     val tf = new HashingTF().setInputCol("__tokens").setOutputCol("__tf")
@@ -35,8 +33,8 @@ object TfIdfEmbed {
     // The IDF fit is one full pass and the transform a second — cache
     // the tokenized sparse TF vectors (bounded by dim, not raw text) so
     // tokenizer + hashing run once. The fit materializes the cache.
-    val tokenized0 = tf.transform(tok.transform(df)).select(col(idCol), col("__tf"))
-    val tokenized = if (persistTf) tokenized0.persist() else tokenized0
+    val tokenized = tf.transform(tok.transform(df)).select(col(idCol), col("__tf"))
+      .persist()
     val idf = new IDF().setInputCol("__tf").setOutputCol("__tfidf").fit(tokenized)
     val norm = new Normalizer().setInputCol("__tfidf").setOutputCol("__vec").setP(2.0)
     val out = norm.transform(idf.transform(tokenized))

@@ -173,7 +173,7 @@ class DedupSpec extends AnyFunSuite {
     // fewest sampled docs, largest 1/f² variance amplification). The
     // decision-relevant property is that estimator error stays inside
     // the 8× fastGateMargin; seed-fixed sampling makes this a
-    // deterministic pin, and BoundProbe's cross-SF calibration table
+    // deterministic pin, and `Probe bound`'s cross-SF calibration table
     // (GATE_CALIB_r16.json, committed at repo root: sf1 ratio 0.703 at
     // f=0.05, sf10 ratio 0.907 at f=0.04; sf30 leg pending) carries the
     // measured at-scale error where the gate actually runs.
@@ -281,7 +281,7 @@ class DedupSpec extends AnyFunSuite {
     // statistical noise (a 50% draw of this corpus measured 56 vs exact
     // 413: cross cells are products of ~binomial counts, variance ∝ 1/f²
     // on a 100-doc build side). Pin the formula's small-corpus regime;
-    // the sampled at-scale error belongs to BoundProbe/GATE_CALIB legs,
+    // the sampled at-scale error belongs to `Probe bound`/GATE_CALIB legs,
     // where f is 0.04–0.05 of ≥500k rows.
     val rows = ps.count() + bs.count()
     val fProd = math.min(1.0, math.max(0.005,
@@ -743,7 +743,7 @@ class DedupSpec extends AnyFunSuite {
     // collision probability — and with it the analytic anchor recall —
     // FREEZES while bucket occupancy resumes growing linearly (the
     // price is quadratic candidates, not recall). Forced bind at
-    // maxPlanes=10, the RecallEval configuration:
+    // maxPlanes=10, the `Probe recall` configuration:
     def bind(n: Long) = Dedup.lshEffParams(n, 0.4, 8, 8, 64L, 10, 64, true)
     val atBind = bind(64L << 10)
     val past10 = bind((64L << 10) * 10)

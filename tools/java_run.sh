@@ -11,7 +11,8 @@
 #
 # Usage: SPARK_GRAFT_SF_DIR=... tools/java_run.sh graft.Bench [query...]
 #        tools/java_run.sh graft.PlanCheck <sfDir> [query...]
-#        tools/java_run.sh graft.{Verify,BoundProbe,LshSkewProbe,RecallEval} <sfDir> ...
+#        tools/java_run.sh graft.Verify <sfDir> <outDir> [query...]
+#        tools/java_run.sh graft.Probe <bound|lsh-skew|recall> <sfDir> [args...]
 # Bench, PlanCheck and the probes run local[N], N = SPARK_GRAFT_CPUS, else
 # every core (graft.LocalSession).
 set -e
